@@ -101,15 +101,7 @@ object Cli {
           val s = spark()
           try {
             val pred = svc.predictModel(s, modelId.toInt, datasetId.toInt)
-            pred.columnPredictions
-              .select("col_name", "predicted_label", "confidence")
-              .orderBy("col_name").collect().foreach(r => println(
-                s"""{"col":${Json.str(r.getString(0))},"label":${Json.str(r.getString(1))},"confidence":${r.getDouble(2)}}"""))
-            pred.suggestions.zipWithIndex.foreach { case (sug, i) =>
-              val triples = sug.model.triples.toSeq.sorted.map { case (a, p, b) =>
-                s"""[${Json.str(a)},${Json.str(p)},${Json.str(b)}]""" }.mkString(",")
-              println(s"""{"suggestion":${i + 1},"linkCost":${sug.scores.linkCost},"triples":[$triples]}""")
-            }
+            (pred.columnJson ++ pred.suggestionJson).foreach(println)
           } finally s.stop()
         case "model" :: "delete" :: id :: Nil =>
           println(s"""{"deleted":${svc.deleteModel(id.toInt)}}""")

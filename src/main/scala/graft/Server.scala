@@ -2,6 +2,7 @@ package graft
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutorService, Executors}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
@@ -57,23 +58,38 @@ import graft.core.{GraftService, Json}
   *   the model's octopus aligns against (resolved at train; absent =
   *   service default) — the upload-OWL-then-train-octopus lifecycle.
   *
-  * Handlers run on the server's executor; Spark work reuses one shared
-  * session (getOrCreate), matching the reference's single embedded
-  * Spark context per server process.
+  * Handlers run concurrently on a fixed pool of daemon threads, one per
+  * available processor (at least two, so a status GET is answered while
+  * a predict runs); the pool is shut down by [[stop]]. Spark work reuses
+  * one shared session (getOrCreate), matching the reference's single
+  * embedded Spark context per server process; concurrent predicts of
+  * one column set share its sample checkpoint through
+  * [[graft.core.Materialize]]'s single-flight build.
   */
 final class GraftHttpServer(svc: GraftService, spark: () => SparkSession) {
 
   private var server: HttpServer = _
+  private var pool: ExecutorService = _
 
   /** Start on `port` (0 = ephemeral); returns the bound port. */
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/v1.0/", handle _)
+    pool = Executors.newFixedThreadPool(
+      math.max(2, Runtime.getRuntime.availableProcessors), r => {
+        val t = new Thread(r, "graft-http-handler")
+        t.setDaemon(true)
+        t
+      })
+    server.setExecutor(pool)
     server.start()
     server.getAddress.getPort
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    if (pool != null) pool.shutdown()
+  }
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = (body + "\n").getBytes(StandardCharsets.UTF_8)
@@ -215,42 +231,13 @@ final class GraftHttpServer(svc: GraftService, spark: () => SparkSession) {
         }
       case ("POST", "model" :: id :: "predict" :: Nil) =>
         queryParam(ex, "dataset") match {
-          case Some(ds) => try {
+          case Some(ds) =>
+            // the service releases pipeline caches when its last unit of
+            // work ends; the rendered predictions are local rows
             val pred = svc.predictModel(spark(), id.toInt, ds.toInt)
-            val cols = pred.columnPredictions
-              .select("col_name", "predicted_label", "confidence")
-              .orderBy("col_name").collect().map(r =>
-                s"""{"col":${Json.str(r.getString(0))},"label":${Json.str(r.getString(1))},"confidence":${r.getDouble(2)}}""")
-              .mkString("[", ",", "]")
-            val sugs = pred.suggestions.zipWithIndex.map { case (sug, i) =>
-              val triples = sug.model.triples.toSeq.sorted
-                .map { case (a, p, b) =>
-                  s"[${Json.str(a)},${Json.str(p)},${Json.str(b)}]" }
-                .mkString(",")
-              s"""{"suggestion":${i + 1},"linkCost":${sug.scores.linkCost},"triples":[$triples]}"""
-            }.mkString("[", ",", "]")
+            val cols = pred.columnJson.mkString("[", ",", "]")
+            val sugs = pred.suggestionJson.mkString("[", ",", "]")
             respond(ex, 200, s"""{"predictions":$cols,"suggestions":$sugs}""")
-          } finally {
-            // a predict is a terminal unit of work: release the
-            // pipeline-stage caches (matcher melt, eval gram sets et
-            // al) so a long-lived server doesn't accumulate persisted
-            // frames until LRU eviction churn — the Caches contract.
-            // (BaggedPrediction's bag-melt DISK scratch is not this
-            // handler's to reclaim: the server's predict path uses the
-            // unbagged classifier — bag melts exist only in the m8
-            // harness path, bounded per JVM and swept by
-            // BaggedPrediction's exit hook. A drain here could race a
-            // concurrently-running harness's lazy frame in shared-JVM
-            // test runs.)
-            // Gated on no async train being in flight: trains run on
-            // dispatchEc while this single-threaded dispatcher serves
-            // predicts, and an ungated release would sweep the running
-            // train's pipeline-stage caches out from under it (correct
-            // but silently uncached). Train starts happen ONLY on this
-            // dispatcher thread, so check-then-release cannot race a
-            // new train; the winning train releases at its own end.
-            if (!svc.trainInFlight) graft.core.Caches.release(spark())
-          }
           case None => err(ex, 400, "query param dataset required")
         }
 

@@ -16,12 +16,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   *  - [[graft.Bench]] calls [[release]] between query groups, so no
   *    query is taxed by another group's cache memory;
-  *  - the REST server calls [[release]] when a unit of work completes
-  *    (end of the predict handler, end of an async train) — otherwise
-  *    repeated invocations accumulate cached frames until executor
-  *    storage evicts them (LRU, so correctness is unaffected, but
-  *    eviction churn is). Other long-lived sessions (specs, a REPL)
-  *    should do the same at their own work boundaries.
+  *  - [[GraftService]] counts its trains and predicts in flight and
+  *    calls [[release]] when the last of them ends, so a long-lived
+  *    server never accumulates cached frames until executor storage
+  *    evicts them (LRU, so correctness is unaffected, but eviction
+  *    churn is), and never sweeps a running unit's caches. Other
+  *    long-lived sessions (specs, a REPL) should release at their own
+  *    work boundaries.
   *
   * [[pipelineCache]] is a thin marker over `persist()` so every such
   * site is greppable and carries this contract, instead of each one

@@ -70,15 +70,22 @@ class GraftService(val rootDir: String,
   private def ssdDir(id: Int): Path = Paths.get(rootDir, "ssds", id.toString)
   private val octopi = collection.concurrent.TrieMap.empty[Int, Octopus]
 
-  /** Async trains currently owned by this service instance. Incremented
-    * SYNCHRONOUSLY in [[trainModelAsync]] before the training Future is
-    * submitted (the Octopus's own Busy state only flips once the Future
-    * RUNS on dispatchEc, so polling octopi alone has a submit-to-run
-    * window in which a concurrent predict's cache release would sweep
-    * the just-started train's stage caches) and decremented in the
-    * Future's finally — it also survives a DELETE of the model, which
-    * removes the Busy octopus from the map mid-train. */
-  private val asyncTrains = new java.util.concurrent.atomic.AtomicInteger
+  /** Trains and predicts in flight in this service, guarded by
+    * [[unitLock]]. The last unit to end calls [[Caches.release]] while
+    * holding the lock, so no unit can start while its pipeline-stage
+    * caches are being swept. */
+  private var inFlight = 0
+  private val unitLock = new Object
+
+  private def beginUnit(): Unit = unitLock.synchronized { inFlight += 1 }
+  private def endUnit(spark: SparkSession): Unit = unitLock.synchronized {
+    inFlight -= 1
+    if (inFlight == 0) Caches.release(spark)
+  }
+  private def unitOfWork[A](spark: SparkSession)(body: => A): A = {
+    beginUnit()
+    try body finally endUnit(spark)
+  }
 
   // ---- tiny JSON helpers (flat string-field objects only) -------------
   private def writeMeta(p: Path, fields: (String, String)*): Unit = {
@@ -420,9 +427,11 @@ class GraftService(val rootDir: String,
       .getOrElse(throw new NoSuchElementException(s"dataset $datasetId"))
     val model = getModel(modelId)
       .getOrElse(throw new NoSuchElementException(s"model $modelId"))
-    val st = octopus(modelId).train(spark, ds.dir)
-    writeModelMeta(model.copy(state = st.toString))
-    st
+    unitOfWork(spark) {
+      val st = octopus(modelId).train(spark, ds.dir)
+      writeModelMeta(model.copy(state = st.toString))
+      st
+    }
   }
 
   /** Launch training ASYNCHRONOUSLY — the reference's REST train
@@ -445,45 +454,32 @@ class GraftService(val rootDir: String,
     val oct = octopus(modelId)
     if (oct.trainState == Octopus.Busy) return Octopus.Busy
     writeModelMeta(model.copy(state = Octopus.Busy.toString))
-    asyncTrains.incrementAndGet() // before submit — see field scaladoc
+    // counted before submit: the Octopus only flips to Busy once the
+    // Future RUNS, and a predict ending in that window must not sweep
+    // the starting train's caches
+    beginUnit()
     scala.concurrent.Future {
       try {
         val st =
           try oct.train(spark, ds.dir)
           catch { case e: Exception =>
             Octopus.Error(String.valueOf(e.getMessage)) }
-        if (st != Octopus.Busy) { // Busy = a concurrent train owns the record
-          writeModelMeta(model.copy(state = st.toString))
-          // train complete = end of a unit of work: drop pipeline-stage
-          // caches so a long-lived server JVM doesn't accumulate them.
-          // Inside the guard: a Busy-losing call must NOT sweep the
-          // winning train's live caches out from under it
-          Caches.release(spark)
-        }
-      } finally asyncTrains.decrementAndGet()
+        // Busy = a concurrent train owns the record
+        if (st != Octopus.Busy) writeModelMeta(model.copy(state = st.toString))
+      } finally endUnit(spark)
     }(GraftService.dispatchEc)
     Octopus.Busy
   }
 
-  /** True while any model's async train is in flight in THIS JVM — the
-    * predict handler's gate for [[Caches.release]] (a release issued
-    * mid-train would sweep the training pipeline's stage caches; see
-    * Server's predict finally-block). Backed by the synchronous
-    * [[asyncTrains]] counter, NOT by polling octopus Busy states: the
-    * counter is already up before trainModelAsync returns its 202, so
-    * there is no submit-to-run window, and it keeps counting a train
-    * whose model record was deleted mid-flight. In-memory state is
-    * sufficient: only trains launched by this service instance share
-    * this JVM's cache pool. */
-  def trainInFlight: Boolean = asyncTrains.get() > 0
-
   /** Predict with model `modelId` over dataset `datasetId`'s registered
-    * tables (ModelAPI modelPredict). */
+    * tables (ModelAPI modelPredict). A unit of work like a train: its
+    * column predictions are a local frame, so reading them after the
+    * cache release needs no job. */
   def predictModel(spark: SparkSession, modelId: Int,
       datasetId: Int): Octopus.OctopusPrediction = {
     val ds = getDataset(datasetId)
       .getOrElse(throw new NoSuchElementException(s"dataset $datasetId"))
-    octopus(modelId).predict(spark, ds.dir, ds.tables)
+    unitOfWork(spark)(octopus(modelId).predict(spark, ds.dir, ds.tables))
   }
 
   /** Ranked semantic-model suggestions for a dataset's columns through a

@@ -147,8 +147,10 @@ class Octopus(
     * `unknown` and all-zero columns are dropped from the model), and
     * the surviving predictions are injected as candidate semantic
     * types (KarmaSuggestModel.scala:175-217), merged with the
-    * name-based candidates. The collect is column-count bounded (one
-    * row per predicted column), never data-proportional. */
+    * name-based candidates. The scored frame is collected exactly once
+    * — column-count bounded (one row per predicted column), never
+    * data-proportional — and `columnPredictions` is a local frame over
+    * those rows in `col_name` order, so its consumers start no job. */
   def predict(spark: SparkSession, dir: String,
       tables: Seq[(String, Seq[String])]): OctopusPrediction = {
     // IllegalStateException, NOT require/IllegalArgumentException: this
@@ -159,9 +161,13 @@ class Octopus(
       throw new IllegalStateException(s"octopus not trained (state=$state)")
     val m = model.get
     val feat = FeatureMatrix.features(spark, dir, tables, cfg)
-    val colPreds = SemanticTypeClassifier.predict(m, feat)
+    val scored = SemanticTypeClassifier.predict(m, feat)
+    // the one pass over the feature plan: every consumer reads these rows
+    val rows = scored.collect().sortBy(_.getString(0))
+    val colPreds = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), scored.schema)
     val predMap: Map[String, SemanticModeler.ColumnPrediction] =
-      colPreds.collect().map { r =>
+      rows.map { r =>
         r.getString(0) -> SemanticModeler.ColumnPrediction(
           r.getString(1), r.getDouble(2),
           r.getMap[String, Double](r.fieldIndex("scores")).toMap)
@@ -220,5 +226,25 @@ object Octopus {
       suggestions: Seq[SemanticModeler.Suggestion],
       /** Post-P3 predictions that actually drove the suggestions;
         * columns the filter dropped are absent. */
-      filteredPredictions: Map[String, SemanticModeler.ColumnPrediction] = Map.empty)
+      filteredPredictions: Map[String, SemanticModeler.ColumnPrediction] = Map.empty) {
+
+    /** One `{"col","label","confidence"}` JSON object per column, in
+      * `col_name` order — the wire form the REST server and the CLI
+      * share. */
+    def columnJson: Seq[String] =
+      columnPredictions.select("col_name", "predicted_label", "confidence")
+        .collect().toSeq.map(r =>
+          s"""{"col":${Json.str(r.getString(0))},"label":${Json.str(r.getString(1))},"confidence":${r.getDouble(2)}}""")
+
+    /** One `{"suggestion","linkCost","triples"}` JSON object per ranked
+      * suggestion, numbered from 1. */
+    def suggestionJson: Seq[String] =
+      suggestions.zipWithIndex.map { case (sug, i) =>
+        val triples = sug.model.triples.toSeq.sorted
+          .map { case (a, p, b) =>
+            s"[${Json.str(a)},${Json.str(p)},${Json.str(b)}]" }
+          .mkString(",")
+        s"""{"suggestion":${i + 1},"linkCost":${sug.scores.linkCost},"triples":[$triples]}"""
+      }
+  }
 }

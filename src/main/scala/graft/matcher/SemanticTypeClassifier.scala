@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   * numTrees=128 depth=10 gini seed=5043, 10 trees when under 20 training
   * rows per the tiny-data guard at :164-171).
   *
-  * Unlike the reference, features never round-trip through the driver:
-  * the profile DataFrame flows straight into `Pipeline.fit`. The
-  * training matrix is one row per *column* (tiny at any data scale), so
+  * The training matrix is one row per *column* (tiny at any data
+  * scale), so `train` collects it once into a local frame —
+  * the feature plan runs one time, not once per pass of the fit — and
   * `repartition(1)` before fit costs nothing and pins RF determinism
   * (the reference's makeRDD(numSlices=1) FIXME at :187-190).
   */
@@ -41,11 +41,17 @@ object SemanticTypeClassifier {
     * so the m4/m7/m8 prediction pins hold. */
   def train(labelled: DataFrame,
       config: FeaturesConfig = FeaturesConfig.Default): PipelineModel = {
-    val n = labelled.count()
+    // one row per column: brought local once, so the count, the label
+    // list, the indexer fit and the RF passes below read these rows
+    // instead of re-running the feature plan each
+    val rows = labelled.collect()
+    val local = labelled.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), labelled.schema)
+    val n = rows.length
     val weights = config.classWeights
     val weighted =
-      if (weights.isEmpty) labelled
-      else labelled.withColumn("class_w",
+      if (weights.isEmpty) local
+      else local.withColumn("class_w",
         weights.foldLeft(lit(1.0)) { case (acc, (label, w)) =>
           when(col("label") === label, lit(w)).otherwise(acc) })
     val indexer = new StringIndexer()
@@ -63,8 +69,7 @@ object SemanticTypeClassifier {
     if (weights.nonEmpty) rf.setWeightCol("class_w")
     val converter = new IndexToString()
       .setInputCol("prediction").setOutputCol("predicted_label")
-      .setLabels(labelled.select("label").distinct()
-        .orderBy("label").collect().map(_.getString(0)))
+      .setLabels(rows.map(_.getAs[String]("label")).distinct.sorted)
     val pipeline = new Pipeline()
       .setStages(Array(indexer, assembler, rf, converter))
     pipeline.fit(weighted.repartition(1).sortWithinPartitions("col_name"))

@@ -21,6 +21,16 @@ class OctopusSpec extends SparkSpec {
     assert(oct.train(spark, sf) === Octopus.Complete)
     val pred = oct.predict(spark, sf, Labels.holdoutTables)
     assert(pred.columnPredictions.count() === Labels.holdout.size.toLong)
+    // compute once: the predictions are local rows, so neither a
+    // consumer's collect nor the wire renderer's projection can re-run
+    // the feature plan
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    assert(pred.columnPredictions.queryExecution.optimizedPlan
+      .isInstanceOf[LocalRelation])
+    assert(pred.columnPredictions
+      .select("col_name", "predicted_label", "confidence")
+      .queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(pred.columnJson.size === Labels.holdout.size)
     assert(pred.suggestions.nonEmpty)
     assert(pred.suggestions.forall(_.model.isConnected))
     // reload path

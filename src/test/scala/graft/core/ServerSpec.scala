@@ -312,4 +312,91 @@ class ServerSpec extends SparkSpec {
       assert(get(base, s"/v1.0/owl/$owlId")._1 === 404)
     } finally server.stop()
   }
+
+  test("concurrent predicts of one fresh column set: byte-identical " +
+      "bodies, one sample build, no cached frames left; a GET is " +
+      "answered while a predict is held") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.SparkSession
+    val root = java.nio.file.Files.createTempDirectory("graft-http-conc").toString
+    val entered, release = new CountDownLatch(1)
+    @volatile var hold = false
+    // holds a predict inside the service until the test lets it go, so
+    // "answered while a predict runs" does not depend on timing
+    val svc = new GraftService(root,
+      knownModels = Seq(ModelerQueries.knownOrderModel)) {
+      override def predictModel(s: SparkSession, modelId: Int,
+          datasetId: Int): Octopus.OctopusPrediction = {
+        if (hold) { entered.countDown(); release.await(120, TimeUnit.SECONDS) }
+        super.predictModel(s, modelId, datasetId)
+      }
+    }
+    val server = new GraftHttpServer(svc, () => spark)
+    val base = s"http://127.0.0.1:${server.start()}"
+    def idOf(body: String): String = """"id":(\d+)""".r
+      .findFirstMatchIn(body).get.group(1)
+    def predictAsync(model: String, ds: String) = client.sendAsync(
+      HttpRequest.newBuilder(
+        URI.create(s"$base/v1.0/model/$model/predict?dataset=$ds"))
+        .POST(HttpRequest.BodyPublishers.noBody()).build(),
+      HttpResponse.BodyHandlers.ofString())
+    try {
+      val trainTables = Labels.trainTables
+        .map { case (t, cs) => s"$t:${cs.mkString(",")}" }.mkString("|")
+      val trainId = idOf(post(base, "/v1.0/dataset",
+        s"""{"name":"train","dir":"$sf","tables":"$trainTables"}""")._2)
+      // a column set no other spec asks for, so its sample is unbuilt
+      val fresh = "nation:n_name,n_regionkey|part:p_brand,p_size"
+      val meltKey = s"melt|$sf|nation:n_name,n_regionkey;part:p_brand,p_size"
+      assert(!Materialize.buildSeconds.contains(meltKey))
+      val freshId = idOf(post(base, "/v1.0/dataset",
+        s"""{"name":"fresh","dir":"$sf","tables":"$fresh"}""")._2)
+      val modelId = idOf(post(base, "/v1.0/model",
+        """{"description":"concurrent"}""")._2)
+      assert(post(base, s"/v1.0/model/$modelId/train?dataset=$trainId",
+        "")._1 === 202)
+      val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
+      var state = get(base, s"/v1.0/model/$modelId")._2
+      while (state.contains("\"state\":\"Busy\"") &&
+          System.nanoTime() < deadline) {
+        Thread.sleep(250)
+        state = get(base, s"/v1.0/model/$modelId")._2
+      }
+      assert(state.contains("\"state\":\"Complete\""), state)
+
+      val dirsBefore = new java.io.File(Materialize.root).list().toSet
+      val concurrent = (1 to 4).map(_ => predictAsync(modelId, freshId))
+        .map(_.get(180, TimeUnit.SECONDS))
+      val (serialCode, serial) =
+        post(base, s"/v1.0/model/$modelId/predict?dataset=$freshId", "")
+      assert(serialCode === 200, serial)
+      assert(serial.contains("\"col\":\"part.p_brand\""), serial)
+      concurrent.foreach { r =>
+        assert(r.statusCode === 200, r.body)
+        assert(r.body.trim === serial, "a concurrent body differs from serial")
+      }
+      val built = new java.io.File(Materialize.root).list().toSet -- dirsBefore
+      assert(built.size === 1 && Materialize.buildSeconds.contains(meltKey),
+        s"expected one sample build for the fresh set, got $built")
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+        "cached frames left after every call returned")
+
+      hold = true
+      val held = predictAsync(modelId, freshId)
+      assert(entered.await(60, TimeUnit.SECONDS), "predict never started")
+      val poll = client.send(
+        HttpRequest.newBuilder(URI.create(s"$base/v1.0/model/$modelId"))
+          .timeout(java.time.Duration.ofSeconds(30)).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(poll.statusCode === 200 &&
+        poll.body.contains("\"state\":\"Complete\""), poll.body)
+      assert(!held.isDone, "the held predict returned before its release")
+      release.countDown()
+      val heldResp = held.get(180, TimeUnit.SECONDS)
+      assert(heldResp.statusCode === 200 && heldResp.body.trim === serial)
+    } finally {
+      release.countDown()
+      server.stop()
+    }
+  }
 }
