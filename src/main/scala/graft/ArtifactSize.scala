@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: build the d2 index-family artifacts and print their
   * on-disk parquet bytes (`sbt "runMain graft.ArtifactSize [sfDir]"`) —
   * the measurement harness for index-narrowing work (band keys as
@@ -9,12 +7,7 @@ import org.apache.spark.sql.SparkSession
 object ArtifactSize {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.session()
     spark.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime()
     val nSig = graft.dedup.DedupQueries.signatures(spark, sfDir).count()

@@ -156,31 +156,7 @@ object Bench {
     // no args = the full portfolio
     val only: Set[String] = args.toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // default: one shuffle partition per core (the bench-scale sweet
-    // spot). Scale rehearsals override upward — a real cluster grows
-    // partition COUNT with data, which fixed-core local mode can't do
-    // by itself: at sf100 a 32-partition shuffle puts ~100x the bytes
-    // in one task's sort page (measured: 2 GiB page-allocation stalls),
-    // while AQE coalesces an oversized partition count back down
-    // wherever stages are small, so the override only affects the
-    // stages that need it.
-    val shuffleParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // One bench run is minutes long; the default 60s StateStore
-      // maintenance tick serves long-lived streaming jobs (snapshot
-      // compaction), not a bench, and its thread racing RpcEnv
-      // shutdown is what dumped a stack trace into the r12 stdout
-      // tail after the summary line (BENCH_r12.json "parsed": null).
-      // Park it beyond any plausible bench duration.
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "6h")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     warmup(spark, sfDir)
     val known = groups.flatten
     val extras = (SparkEntry.queries.keySet -- known).toSeq.sorted
@@ -203,10 +179,6 @@ object Bench {
           if (times.contains(-1.0)) -1.0 else times.sorted.apply(Runs / 2)
       }
       releaseCaches(spark)
-      // this loop is the canonical single-owner work boundary: every
-      // query in the group was materialized via count(), so no lazy
-      // consumer of a bagged-predict scratch dir survives the group
-      matcher.BaggedPrediction.drainScratch()
     }
     def jmap(m: collection.Map[String, Double]): String =
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")

@@ -1,33 +1,30 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-leg invariant runner: engine-side replacement checks for the
   * queries whose DuckDB twins are out of contract at a given scale
   * (see d9's oracle note). `runMain graft.Check <sfDir> [check...]`
   * runs the named checks and prints one `CHECK <name> ...` line each
   * (violations=0 means consistent). DEFAULT is d9_consistency only —
-  * the invariant a scale leg must always run; p16_shard_ab,
-  * p16_count_vs_collect and collect_ratio are opt-in DIAGNOSTICS
-  * (timing A/Bs that materialize queries several times over) and must
-  * be named explicitly. */
+  * the invariant a scale leg must always run; st_profile, p16_shard_ab
+  * and collect_ratio are opt-in DIAGNOSTICS (timing runs that
+  * materialize queries several times over) and must be named
+  * explicitly. Each diagnostic times the production entry points
+  * themselves; none re-implements a query's stages. */
 object Check {
   /** Every check this runner knows. AdversarialParitySpec resolves
     * sfExpectedMismatch reasons that cite a replacement check against
     * this set, so a renamed check can't orphan a register reason. */
   val KnownChecks: Set[String] = Set(
-    "d9_consistency", "p16_shard_ab", "p16_count_vs_collect",
-    "collect_ratio", "nd_channel_stats", "st_profile", "m8_profile",
-    "d2_profile")
+    "d9_consistency", "p16_shard_ab", "collect_ratio", "st_profile")
   /** The always-run scale-leg invariants; the rest are opt-in timing
     * diagnostics (see the Scaladoc above). */
   val DefaultChecks: Set[String] = Set("d9_consistency")
 
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    // args after the dir: check names, plus (for collect_ratio) an
-    // optional query-name filter — any arg matching a SparkEntry query
-    // restricts the ratio loop to those queries
+    // args after the dir: check names, plus (for collect_ratio and
+    // st_profile) an optional query-name filter — any arg matching a
+    // SparkEntry query restricts the loop to those queries
     val (queryFilter, checkNames) =
       args.drop(1).partition(SparkEntry.queries.contains)
     val names = if (checkNames.nonEmpty) checkNames.toSet
@@ -37,40 +34,7 @@ object Check {
     if (unknown.nonEmpty)
       System.err.println(
         s"[graft] unknown check(s) ignored: ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // nd_channel_stats: the production embedding pair channel's
-    // verified-pair census by cosine decile band (>= the d9 edge floor
-    // 0.4) at THIS corpus and THIS geometry. The diagnostic behind the
-    // NdTargetBucket keep decision (PERF.md r15): smaller targets grow
-    // bits sooner, and the resulting per-band cost drop is partly
-    // RECALL LOSS in the 0.4-0.7 range that d9's cluster edges and
-    // s8's kNN graph consume — this check makes that loss visible as a
-    // found-pair census per geometry (run it under different
-    // SPARK_GRAFT_ND_TARGET_BUCKET values to compare).
-    if (names("nd_channel_stats")) {
-      import org.apache.spark.sql.functions._
-      val rows = dedup.DedupQueries.embeddingPairs(spark, dir)
-        .filter(col("cos") >= dedup.DedupQueries.NearDupCosThreshold)
-        .withColumn("cband",
-          expr("cast(round(cos * 1e6) as bigint) div 100000"))
-        .groupBy(col("cband")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val n = sources.Tables.table(spark, dir, "embeddings").count()
-      val bits = dedup.DedupQueries.ndBitsFor(n)
-      println(s"CHECK nd_channel_stats n=$n bits=$bits bands=${
-        dedup.DedupQueries.ndBandsFor(bits)} target=${
-        dedup.DedupQueries.NdTargetBucket} " +
-        (4L to 10L).map(b => s"cband$b=${rows.getOrElse(b, 0L)}")
-          .mkString(" "))
-    }
+    val spark = LocalSpark.session()
     // st_profile: where do the st-family's bench seconds actually go?
     // Runs each streaming query once (same entry point the bench
     // times) with a StreamingQueryListener attached and prints, per
@@ -128,154 +92,6 @@ object Check {
         }
       } finally spark.streams.removeListener(listener)
     }
-    // m8_profile: stage-by-stage wall clock of the bagged-prediction
-    // feature battery (the r15 verdict's #2 target). Reproduces
-    // BaggedPrediction.predict's exact stages through the same public
-    // entry points and times each with a count()/noop action, two
-    // passes (pass 1 absorbs codegen/JIT + the matcher model train,
-    // pass 2 is the steady state the bench median reports).
-    if (names("m8_profile")) {
-      import org.apache.spark.sql.functions._
-      def time[A](label: String, pass: Int)(f: => A): A = {
-        val t0 = System.nanoTime(); val a = f
-        println(f"CHECK m8_profile pass=$pass stage=$label%-14s " +
-          f"s=${(System.nanoTime() - t0) / 1e9}%.3f")
-        a
-      }
-      val model = matcher.MatcherSession.model(spark, dir)
-      (1 to 2).foreach { pass =>
-        val melted = matcher.FeatureMatrix.sampledMelt(
-          spark, dir, matcher.Labels.holdoutTables)
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft-m8probe").toString
-        time("bag+write", pass) {
-          matcher.Resampler.assignBags(melted)
-            .withColumn("col_name",
-              concat(col("col_name"), lit("#"), col("bag_id")))
-            .drop("bag_id")
-            .write.mode("overwrite").parquet(scratch)
-        }
-        val bagged = spark.read.parquet(scratch)
-        val pool = {
-          import spark.implicits._
-          matcher.Labels.train
-            .map { case (t, c, l) => (s"$t.$c", l) }.toDF("col_name", "label")
-        }
-        val nf = time("nameFeatures", pass) {
-          val f = matcher.FeatureMatrix.nameFeatures(
-            bagged.select(col("col_name")).distinct(), pool)
-          f.count(); f
-        }
-        val prof = time("profile+shares", pass) {
-          val f = profile.ColumnProfiler.profileWithShares(bagged)
-          f.count(); f
-        }
-        val oneHots = time("oneHots", pass) {
-          val f = profile.ColumnProfiler
-            .inferredTypeOneHots(bagged, boundedInput = true)
-            .drop("inferred_type")
-          f.count(); f
-        }
-        val feat = time("featJoin", pass) {
-          val f = prof
-            .join(oneHots, Seq("col_name"))
-            .join(nf, col("col_name") === nf("query_col"))
-            .select(col("col_name") +:
-              matcher.FeatureMatrix.featureCols.map(c =>
-                coalesce(col(c).cast("double"), lit(-1.0)).as(c)): _*)
-          f.count(); f
-        }
-        time("rfPredict", pass) {
-          matcher.SemanticTypeClassifier.predict(model, feat).count()
-        }
-        time("fullPredict", pass) {
-          matcher.BaggedPrediction.predict(model, melted).count()
-        }
-        core.Caches.deleteScratch(scratch)
-      }
-    }
-    // d2_profile: stage-by-stage wall clock of the MinHash pair channel
-    // (the top sf10 cost after the r16 band-keys fix). Stages 1-3 are
-    // the Materialize-backed checkpoints (first touch pays the build,
-    // which is the number reported); candidates/est/verify reproduce
-    // minhashPairs' tail through the same public frames and time each
-    // with a noop sink, so the split between the banded self-join, the
-    // signature-estimate joins and the exact shingle verify is visible.
-    if (names("d2_profile")) {
-      import org.apache.spark.sql.functions._
-      def time[A](label: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val a = f
-        println(f"CHECK d2_profile stage=$label%-12s " +
-          f"s=${(System.nanoTime() - t0) / 1e9}%.3f")
-        a
-      }
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      spark.sparkContext.setJobDescription("d2_profile")
-      time("shingles")(dedup.DedupQueries.shingled(spark, dir).count())
-      val mins = time("sigs")(
-        { val f = dedup.DedupQueries.signatures(spark, dir); f.count(); f })
-      val capped = time("banded")(
-        { val f = dedup.DedupQueries.cappedBanded(spark, dir); f.count(); f })
-      val pairs = time("candidates")(
-        { val f = dedup.DedupQueries.candidatePairs(capped); noop(f); f })
-      val est = time("est") {
-        // mirror minhashPairs' gated broadcast (D2EstBroadcastMaxDocBytes)
-        val estMins =
-          if (dedup.DedupQueries.tableBytes(dir, "documents") <
-              dedup.DedupQueries.D2EstBroadcastMaxDocBytes)
-            broadcast(mins)
-          else mins
-        val f = pairs
-          .join(estMins.select(col("doc_id").as("doc1"), col("mh").as("mh1")),
-            "doc1")
-          .join(estMins.select(col("doc_id").as("doc2"), col("mh").as("mh2")),
-            "doc2")
-          .withColumn("est", graft.functions.MinHashMatchCount
-            .matchCount(col("mh1"), col("mh2")).cast("double") /
-            dedup.DedupQueries.MinhashK)
-          .filter(col("est") >= dedup.DedupQueries.JaccardThreshold -
-            dedup.DedupQueries.EstMargin)
-          .select(col("doc1"), col("doc2"))
-        noop(f); f
-      }
-      // the two verify forms, timed against the same est stream: the
-      // pre-r16 gram-string one and the shipped fingerprint one (the
-      // committed A/B behind the minhashPairs/incrementalDedup rewrite)
-      time("verify_str") {
-        val docs = dedup.DedupQueries.shingled(spark, dir)
-        noop(est
-          .join(docs.select(col("doc_id").as("doc1"), col("sh").as("sh1")),
-            "doc1")
-          .join(docs.select(col("doc_id").as("doc2"), col("sh").as("sh2")),
-            "doc2")
-          .withColumn("jac", text.Text.jaccard(col("sh1"), col("sh2")))
-          .filter(col("jac") >= dedup.DedupQueries.JaccardThreshold)
-          .select(col("doc1"), col("doc2"),
-            round(col("jac"), 6).as("jaccard")))
-      }
-      time("verify_fp") {
-        // n/fp are precomputed checkpoint columns since r16 (pruned
-        // scan, no per-consumer md5 transform) — mirror the shipped
-        // verify exactly
-        val slim = dedup.DedupQueries.shingled(spark, dir)
-          .select(col("doc_id"), col("n"), col("fp"))
-        noop(est
-          .join(slim.select(col("doc_id").as("doc1"),
-            col("n").as("n1"), col("fp").as("fp1")), "doc1")
-          .join(slim.select(col("doc_id").as("doc2"),
-            col("n").as("n2"), col("fp").as("fp2")), "doc2")
-          .withColumn("inter",
-            size(array_intersect(col("fp1"), col("fp2"))).cast("long"))
-          .withColumn("jac", col("inter").cast("double") /
-            nullif((col("n1") + col("n2") - col("inter")).cast("double"),
-              lit(0.0)))
-          .filter(col("jac") >= dedup.DedupQueries.JaccardThreshold)
-          .select(col("doc1"), col("doc2"),
-            round(col("jac"), 6).as("jaccard")))
-      }
-      println("CHECK d2_profile done=1")
-    }
     if (names("d9_consistency")) {
       val v = dedup.DedupQueries.embeddingClusterViolations(spark, dir)
       println(s"CHECK d9_consistency violations=$v")
@@ -300,16 +116,6 @@ object Check {
         println(f"CHECK p16_shard_ab round=$round single_s=$t1%.1f " +
           f"sharded5_s=$t5%.1f equal=${single == sharded}")
       }
-    }
-    // diagnostic: Bench drives queries via count(); quantify how much
-    // of p16's plan count() lets Catalyst prune vs a full collect()
-    if (names("p16_count_vs_collect")) {
-      def time[A](f: => A): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      val tc = time(profile.ProfileQueries.approxFds(spark, dir).count())
-      val tl = time(profile.ProfileQueries.approxFds(spark, dir).collect())
-      println(f"CHECK p16_count_vs_collect count_s=$tc%.1f collect_s=$tl%.1f")
     }
     // portfolio-wide count-vs-collect diagnostic (r14 verdict #3):
     // Bench drives queries via count(), which lets Catalyst prune any
@@ -337,7 +143,6 @@ object Check {
               (tl / math.max(tc, 1e-9) * 100).round}")
         }
         core.Caches.release(spark)
-        matcher.BaggedPrediction.drainScratch()
       }
     }
     spark.stop()

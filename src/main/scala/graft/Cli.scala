@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.{GraftService, Json}
 
 /** Command-line transport over [[graft.core.GraftService]] — the user
@@ -36,18 +34,6 @@ import graft.core.{GraftService, Json}
   * Output is one JSON object per line (machine-consumable, like the
   * reference's JSON responses). */
 object Cli {
-
-  private def spark(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def parseTables(s: String): Seq[(String, Seq[String])] =
     s.split("\\|").toSeq.filter(_.nonEmpty).map { part =>
@@ -93,12 +79,12 @@ object Cli {
             case None => println(s"""{"error":"model $id not found"}""")
           }
         case "model" :: "train" :: modelId :: datasetId :: Nil =>
-          val s = spark()
+          val s = LocalSpark.session()
           try println(s"""{"state":"${
             svc.trainModel(s, modelId.toInt, datasetId.toInt)}"}""")
           finally s.stop()
         case "model" :: "predict" :: modelId :: datasetId :: Nil =>
-          val s = spark()
+          val s = LocalSpark.session()
           try {
             val pred = svc.predictModel(s, modelId.toInt, datasetId.toInt)
             (pred.columnJson ++ pred.suggestionJson).foreach(println)

@@ -1,22 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for selected queries so the
   * shuffle/broadcast/pushdown structure can be audited (run:
   * `sbt "runMain graft.Explain q5_nation_revenue ..."`). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the default 4 cores / 4 partitions are what the specs' session
+    // plans with, so `counts` reproduces GlobalPlanSpec's budgets
+    val spark = LocalSpark.session()
     spark.sparkContext.setLogLevel("ERROR")
     // `counts` mode: one line per query with its shuffle/broadcast
     // operator counts from the initial physical plan — the generator
-    // for PlanBudgetSpec's pinned shuffle budgets
+    // for GlobalPlanSpec's pinned shuffle budgets
     if (args.headOption.contains("counts")) {
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
         val (s, b) = Explain.exchangeCounts(fn(spark, sfDir))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: write `.explain("formatted")` output for selected queries
@@ -14,20 +13,14 @@ import org.apache.spark.sql.functions._
   * pipeline at the band geometry a corpus of `n` vectors gets
   * (ndBitsFor/ndBandsFor), WITHOUT the Materialize checkpoint wrapper,
   * so the signature-build plan itself is visible instead of a
-  * checkpoint scan — and `m8_feat` (the bagged feature frame predict()
-  * consumes, visible only mid-pipeline). */
+  * checkpoint scan — and `t20_induction_scan` (the frame
+  * TextQueries.inducedMerges collects). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.session()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
@@ -41,16 +34,10 @@ object PlanDump {
             .withColumn("nrm", graft.text.Text.norm(col("v")))
           (dedup.DedupQueries.embeddingPairsLsh(e, n), s"d5_lsh_inner_$n")
         case "t20_induction_scan" =>
-          // the distributed half of inducedMerges (the driver loop
-          // consumes this frame's collect) — t20/t21's corpus-sized
-          // cost, invisible in their query plans (the merge list is a
-          // LocalTableScan by the time the query frame exists). Since
-          // r16 the scan is a rollup of the shared wordCounts
-          // checkpoint; this mirrors inducedMerges' frame exactly.
-          (graft.text.TextQueries.wordCounts(spark, sfDir)
-            .groupBy(col("w")).agg(sum(col("n")).as("freq"))
-            .orderBy(col("freq").desc, col("w"))
-            .limit(graft.text.TextQueries.BpeShapeWords),
+          // t20/t21's corpus-sized cost, invisible in their query plans
+          // (the merge list is a LocalTableScan by the time the query
+          // frame exists)
+          (graft.text.TextQueries.inductionShapes(spark, sfDir),
             "t20_induction_scan")
         case other =>
           (SparkEntry.queries(other)(spark, sfDir), other)

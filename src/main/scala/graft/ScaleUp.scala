@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data generator: replicates an sf directory FACTOR
@@ -70,14 +70,8 @@ object ScaleUp {
     // 100% hot instead of the documented Zipf head
     require(!skew || factor >= 2, "skew mode needs factor >= 2")
     require(!dst.startsWith("/root/testdata"), "testdata is read-only")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     // the driver's sf layout is ONE parquet FILE per table (not a Spark

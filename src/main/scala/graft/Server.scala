@@ -349,12 +349,7 @@ object Server {
       sys.exit(2)
     }
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
-    lazy val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    lazy val spark = LocalSpark.session()
     val bound = new GraftHttpServer(new GraftService(root), () => spark)
       .start(port)
     println(s"""{"listening":$bound,"store":${Json.str(root)}}""")

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
 import org.apache.spark.sql.SparkSession
@@ -90,9 +90,13 @@ class GraftService(val rootDir: String,
   // ---- tiny JSON helpers (flat string-field objects only) -------------
   private def writeMeta(p: Path, fields: (String, String)*): Unit = {
     Files.createDirectories(p)
-    Files.writeString(p.resolve("meta.json"),
+    // written aside, then renamed over: a concurrent reader (a GET
+    // polling a training model's state) must never see a truncated file
+    val tmp = Files.createTempFile(p, "meta", ".tmp")
+    Files.writeString(tmp,
       fields.map { case (k, v) => s"  ${Json.str(k)}: ${Json.str(v)}" }
         .mkString("{\n", ",\n", "\n}\n"))
+    Files.move(tmp, p.resolve("meta.json"), StandardCopyOption.ATOMIC_MOVE)
   }
   private def readMeta(p: Path): Map[String, String] = {
     // keys are writer-controlled identifiers; values are full JSON string

@@ -36,10 +36,25 @@ object Materialize {
   private val inFlight =
     new ConcurrentHashMap[String, CompletableFuture[String]]()
   private val n = new AtomicInteger()
+  /** The per-JVM temp root every checkpoint and scratch dir lives
+    * under. A JVM shutdown hook deletes it recursively:
+    * `File.deleteOnExit` would not, since the root is non-empty by
+    * then. */
   private[core] lazy val root = {
     val d = java.nio.file.Files.createTempDirectory("graft-materialized")
-    d.toFile.deleteOnExit()
-    d.toString
+      .toString
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => Caches.deleteScratch(d)))
+    d
+  }
+
+  /** A fresh, empty directory under [[root]] — for checkpoints and for
+    * any per-call scratch output (bag tables, layout twins, stream
+    * sinks), so one exit-time delete reclaims them all. */
+  private[graft] def scratchDir(): String = {
+    val dir = s"$root/t${n.incrementAndGet()}"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    dir
   }
 
   /** Read-through materialization of `compute` under `key`.
@@ -75,7 +90,7 @@ object Materialize {
           val dir = paths.get(key) match {
             case existing: String => existing
             case null =>
-              val dir = s"$root/t${n.incrementAndGet()}"
+              val dir = scratchDir()
               val t0 = System.nanoTime()
               try compute.write.mode("overwrite").parquet(dir)
               catch { case e: Throwable => Caches.deleteScratch(dir); throw e }

@@ -125,13 +125,10 @@ object DedupQueries {
     * sit at p close to 1, where extra bits cost little (p=0.95, bits 8,
     * bands 12: recall 0.9996).
     *
-    * Production value 125. The env override exists ONLY for the
-    * committed sf10 cost A/B (r14 verdict #6: 125 was chosen under the
-    * degenerate r14 plane family, re-decided with measurable recall);
-    * it must never be set in tests or driver runs — ndBitsFor pins in
-    * EmbeddingLshRecallSpec assume 125. */
-  val NdTargetBucket: Long = sys.env.get("SPARK_GRAFT_ND_TARGET_BUCKET")
-    .flatMap(_.toLongOption).getOrElse(125L)
+    * 125 was re-decided by the committed sf10 cost A/B with measurable
+    * recall (r14 verdict #6); ndBitsFor pins in EmbeddingLshRecallSpec
+    * assume it. */
+  final val NdTargetBucket = 125L
 
   /** The recall design point for [[ndBandsFor]]: hold the multi-band
     * OR-construction's predicted recall at or above

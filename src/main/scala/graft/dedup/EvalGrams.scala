@@ -36,33 +36,14 @@ import org.apache.spark.util.sketch.BloomFilter
   * NON-corpus-proportional: at most [[ExactMax]] exact strings, else
   * a filter whose bits scale with the eval set, merged in parallel
   * (see [[bloomOf]]) rather than through one driver thread.
-  * `SPARK_GRAFT_EVAL_EXACT_MAX` overrides the gate for scale
-  * rehearsals, whose synthetic `doc_id % mod` eval subset grows with
-  * the corpus (a rehearsal-only shape — production eval suites are
-  * fixed-size).
   */
 object EvalGrams {
 
   /** Max distinct eval grams shipped executor-wide as exact strings.
     * ~4M grams ≈ a few hundred MB broadcast at typical shingle
     * lengths — the top of what a real benchmark suite produces and of
-    * what an executor should hold per probe set. A malformed
-    * `SPARK_GRAFT_EVAL_EXACT_MAX` must not surface as an
-    * ExceptionInInitializerError three frames away from the typo, so
-    * the parse is defensive: warn (naming the variable) and keep the
-    * default. */
-  val ExactMax: Long = {
-    val default = 4L * 1000 * 1000
-    sys.env.get("SPARK_GRAFT_EVAL_EXACT_MAX").map { s =>
-      try s.trim.toLong
-      catch { case _: NumberFormatException =>
-        System.err.println(
-          s"[graft] SPARK_GRAFT_EVAL_EXACT_MAX='$s' is not a long; " +
-            s"using default $default")
-        default
-      }
-    }.getOrElse(default)
-  }
+    * what an executor should hold per probe set. */
+  final val ExactMax = 4L * 1000 * 1000
 
   /** False-positive rate of the bloom path's filter. */
   val BloomFpp: Double = 0.01

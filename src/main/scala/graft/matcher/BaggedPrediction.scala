@@ -20,44 +20,6 @@ import graft.profile.ColumnProfiler
   * for short columns — the whole path is partition-order independent. */
 object BaggedPrediction {
 
-  /** Scratch dirs written by predict() calls. Each call parquets its
-    * bag melt to a fresh temp dir (see the checkpoint rationale in
-    * [[predict]]); a dir must outlive the call's own LAZY consumers —
-    * which neither Caches.release nor a sibling predict nor any other
-    * in-JVM caller can know about (test suites run predicts
-    * concurrently, and an eager or caller-triggered drain was measured
-    * deleting a dir another suite's frame was still reading). So
-    * reclamation is JVM-exit ONLY: the registry is swept by the
-    * shutdown hook, bounding a harness's footprint to its JVM
-    * lifetime — KB-to-MB per call (the bag table is config-bounded:
-    * #cols × numBags × bagSize rows), and the bagged path exists only
-    * in harness/bench JVMs (the server's predict uses the unbagged
-    * classifier). */
-  private val scratchDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  private def reclaimScratch(): Unit = {
-    var d = scratchDirs.poll()
-    while (d != null) {
-      graft.core.Caches.deleteScratch(d); d = scratchDirs.poll()
-    }
-  }
-
-  /** Opt-in reclamation point for a caller that OWNS a work boundary:
-    * every predict() result fully materialized (collected / counted /
-    * written), no lazy frame from any call still alive, and no other
-    * thread mid-predict — e.g. a single-threaded bench loop between
-    * query groups, or a long-lived serving harness between batches.
-    * Under sbt's parallel test suites no single suite can promise
-    * that, which is why the default stays exit-hook-only; this caps
-    * the footprint of the long-lived single-owner JVMs the hook alone
-    * doesn't bound (dirs are KB-to-MB each, but calls are unbounded). */
-  def drainScratch(): Unit = reclaimScratch()
-
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => reclaimScratch()))
-  }
-
   /** Predict per-column labels by averaging per-bag score vectors. */
   def predict(model: PipelineModel, melted: DataFrame,
       numBags: Int = Resampler.DefaultNumBags,
@@ -77,9 +39,12 @@ object BaggedPrediction {
     // the Materialize rationale, applied per call because predict has
     // no stable cache key across arbitrary datasets)
     val spark = melted.sparkSession
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-bagged").toString
-    scratchDirs.add(scratch)
+    // the dir must outlive every LAZY consumer of the returned frame,
+    // which no caller can bound (specs predict concurrently; an eager
+    // drain was measured deleting a dir another suite's frame was
+    // still reading), so it lives until the JVM-exit delete of
+    // Materialize's root — KB-to-MB per call
+    val scratch = graft.core.Materialize.scratchDir()
     Resampler.assignBags(melted, numBags, bagSize)
       .withColumn("col_name",
         concat(col("col_name"), lit("#"), col("bag_id")))

@@ -45,8 +45,7 @@ object LayoutQueries {
     val id = ident(dir)
     val (ot, lt) = (s"orders_b_$id", s"lineitem_b_$id")
     built.computeIfAbsent(s"bucketed|$dir", _ => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-bucketed").toString
+      val root = graft.core.Materialize.scratchDir()
       Tables.table(s, dir, "orders")
         .write.bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$root/orders").mode("overwrite").saveAsTable(ot)
@@ -62,8 +61,7 @@ object LayoutQueries {
     * returns its path. */
   def partitionedOrders(s: SparkSession, dir: String): String =
     built.computeIfAbsent(s"partitioned|$dir", _ => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-partitioned").toString
+      val root = graft.core.Materialize.scratchDir()
       Tables.table(s, dir, "orders")
         .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
         .write.partitionBy("o_month").mode("overwrite").parquet(root)

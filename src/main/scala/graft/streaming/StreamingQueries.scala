@@ -56,9 +56,9 @@ object StreamingQueries {
     * setting so a cluster-sized configuration is never exceeded and
     * large inputs keep their parallelism: a 100-TB ingest saturates
     * the bound, a KB-state bench stream stops paying 32 idle commits
-    * per batch. Override via SPARK_GRAFT_STREAM_PART_BYTES.
+    * per batch.
     *
-    * The 256 KiB default is MEASURED, not guessed: the divisor is
+    * The 256 KiB target is MEASURED, not guessed: the divisor is
     * compressed columnar bytes while stream work is per-row compute on
     * decompressed rows (PII regexes, shingle hashing — a 10-20x
     * expansion), so IO-sized targets starve compute. Grid at sf1
@@ -67,8 +67,7 @@ object StreamingQueries {
     * partition), 256 KiB beat it (69.5 s); at sf0.1 (the driver's
     * bench scale) 256 KiB also beat 8 MiB (13.7 vs 16.3 s vs 20.4
     * baseline, median-of-3). */
-  val StreamPartBytes: Long = sys.env
-    .getOrElse("SPARK_GRAFT_STREAM_PART_BYTES", s"${256L << 10}").toLong
+  final val StreamPartBytes = 256L << 10
 
   /** Size-derived stream partition suggestion, recorded by
     * [[streamTable]] for [[runStream]] to apply at start.
@@ -177,8 +176,7 @@ object StreamingQueries {
     val sink = sys.props.get("graft.stream.sink")
       .orElse(sys.env.get("SPARK_GRAFT_STREAM_SINK"))
     if (sink.contains("parquet")) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_stream_$nm").toString
+      val dir = graft.core.Materialize.scratchDir()
       // foreachBatch is AT-LEAST-ONCE: a micro-batch re-executed after
       // a task/executor failure (plausible at rehearsal scale) must not
       // double-append. Each batch overwrites its own batchId-keyed

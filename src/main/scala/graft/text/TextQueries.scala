@@ -1596,16 +1596,22 @@ object TextQueries {
   def inducedMerges(s: org.apache.spark.sql.SparkSession,
       dir: String): Seq[Bpe.Merge] =
     mergeCache.computeIfAbsent(mergeCacheKey(dir), _ => {
-      // the induction's corpus-sized scan is the shared [[wordCounts]]
-      // checkpoint's rollup (r16, §6): identical freqs (long sums of
-      // the per-source counts), identical (freq desc, w) cut
-      val shapes = wordCounts(s, dir)
-        .groupBy(col("w")).agg(sum(col("n")).as("freq"))
-        .orderBy(col("freq").desc, col("w"))
-        .limit(BpeShapeWords)
+      val shapes = inductionShapes(s, dir)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       Bpe.induce(shapes, BpeMerges, BpeMinPairFreq)
     })
+
+  /** The distributed half of [[inducedMerges]]: the [[BpeShapeWords]]
+    * most frequent words as (w, freq), which the driver-side induction
+    * collects. The corpus-sized scan is the shared [[wordCounts]]
+    * checkpoint's rollup (r16, §6): identical freqs (long sums of the
+    * per-source counts), identical (freq desc, w) cut. */
+  private[graft] def inductionShapes(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    wordCounts(s, dir)
+      .groupBy(col("w")).agg(sum(col("n")).as("freq"))
+      .orderBy(col("freq").desc, col("w"))
+      .limit(BpeShapeWords)
 
   /** The t18 fertility re-measure hook: tokens-per-word when the corpus
     * is tokenized with t20's INDUCED vocab instead of t18's regex

@@ -63,6 +63,30 @@ class GraftServiceSpec extends SparkSpec {
     assert(svc.getModel(model.id).isEmpty)
   }
 
+  test("a record rewrite is never read half-written (a GET polling a " +
+      "training model's state)") {
+    val root = java.nio.file.Files.createTempDirectory("graft-meta").toString
+    val svc = new GraftService(root)
+    val owl = svc.createOwl("tpch", "v0", "ttl",
+      graft.modeler.Ontology.tpchTurtle)
+    @volatile var writing = true
+    val writer = new Thread(() =>
+      try (1 to 3000).foreach(i => svc.updateOwl(owl.id, Some(s"v$i"), None))
+      finally writing = false)
+    writer.start()
+    var reads, torn = 0
+    var firstTorn: Option[Throwable] = None
+    while (writing) {
+      try assert(svc.getOwl(owl.id).exists(_.name == "tpch"))
+      catch { case e: Throwable => torn += 1; firstTorn = firstTorn.orElse(Some(e)) }
+      reads += 1
+    }
+    writer.join()
+    Caches.deleteScratch(root)
+    assert(reads > 0)
+    assert(torn == 0, s"of $reads reads saw a partial record: $firstTorn")
+  }
+
   test("owl + ssd CRUD: store round-trip, validation, dependent-delete " +
       "refusal (reference OwlStorage/SsdStorage + OwlInterface.dependents)") {
     val root = java.nio.file.Files.createTempDirectory("graft-owl").toString

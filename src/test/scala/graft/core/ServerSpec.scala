@@ -115,8 +115,8 @@ class ServerSpec extends SparkSpec {
           .getPersistentRDDs.values.map(_.name).mkString(", ")}")
       // (bag-melt DISK scratch needs no assertion here: the server's
       // predict path uses the unbagged classifier — BaggedPrediction
-      // is the m8 harness path, whose scratch registry is swept by its
-      // JVM-exit hook; see BaggedPrediction.scratchDirs)
+      // is the m8 harness path, whose scratch dirs live under
+      // Materialize's root, deleted at JVM exit)
 
       // error contract
       assert(get(base, "/v1.0/dataset/999")._1 === 404)
