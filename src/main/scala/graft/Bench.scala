@@ -96,7 +96,7 @@ object Bench {
       "e7_effective_tokens", "e8_release_manifest",
       "e9_curriculum_buckets", "e10_resume_manifest",
       "e11_shard_integrity"),
-    // structured streaming (file source -> AvailableNow -> memory sink)
+    // structured streaming (file source -> AvailableNow -> parquet sink)
     Seq("st1_stream_event_rollup", "st2_stream_sessions",
       "st3_stream_distinct_docs", "st4_stream_quality_scrub",
       "st5_stream_decontaminate", "st6_stream_semantic_flag",

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{GraftService, Json}
+import graft.core.{GraftService, Json, Specs}
 
 /** Command-line transport over [[graft.core.GraftService]] — the user
   * surface replacing the reference's REST endpoints one command per
@@ -35,23 +35,19 @@ import graft.core.{GraftService, Json}
   * reference's JSON responses). */
 object Cli {
 
-  private def parseTables(s: String): Seq[(String, Seq[String])] =
-    s.split("\\|").toSeq.filter(_.nonEmpty).map { part =>
-      part.split(":", 2) match {
-        case Array(t, cs) => t -> cs.split(",").toSeq.filter(_.nonEmpty)
-        case _ =>
-          System.err.println(
-            s"malformed table spec '$part' (expected table:col,col|table:col)")
-          sys.exit(2)
-      }
-    }
+  def main(args: Array[String]): Unit = {
+    val code = run(args.toList)
+    if (code != 0) sys.exit(code)
+  }
 
-  def main(args: Array[String]): Unit = args.toList match {
+  /** Run one command; 0 on success, 2 on a usage error or a malformed
+    * argument (the message goes to stderr). */
+  private[graft] def run(args: List[String]): Int = args match {
     case root :: rest =>
       val svc = new GraftService(root)
-      rest match {
+      try rest match {
         case "dataset" :: "add" :: name :: dir :: tables :: Nil =>
-          val ref = svc.createDataset(name, dir, parseTables(tables))
+          val ref = svc.createDataset(name, dir, Specs.tables(tables))
           println(s"""{"id":${ref.id},"name":${Json.str(ref.name)}}""")
         case "dataset" :: "list" :: Nil =>
           svc.datasetKeys.flatMap(svc.getDataset).foreach(d =>
@@ -59,7 +55,7 @@ object Cli {
         case "dataset" :: "get" :: id :: Nil =>
           svc.getDataset(id.toInt) match {
             case Some(d) => println(
-              s"""{"id":${d.id},"name":${Json.str(d.name)},"dir":${Json.str(d.dir)},"tables":${Json.str(d.tables.map { case (t, cs) => s"$t:${cs.mkString(",")}" }.mkString("|"))}}""")
+              s"""{"id":${d.id},"name":${Json.str(d.name)},"dir":${Json.str(d.dir)},"tables":${Json.str(Specs.renderTables(d.tables))}}""")
             case None => println(s"""{"error":${Json.str(s"dataset $id not found")}}""")
           }
         case "dataset" :: "delete" :: id :: Nil =>
@@ -112,8 +108,7 @@ object Cli {
           println(s"""{"deleted":${svc.deleteOwl(id.toInt)}}""")
         case "ssd" :: "add" :: name :: ontIds :: table :: mappings :: Nil =>
           val onts = ontIds.split(",").toSeq.filter(_.nonEmpty).map(_.toInt)
-          val m = mappings.split(",").toSeq.filter(_.nonEmpty).map { kv =>
-            val Array(k, v) = kv.split("=", 2); k -> v }.toMap
+          val m = Specs.mappings(mappings)
           val attrs = graft.core.Ssd
             .identity(0, table, m.keys.toSeq.sorted).attributes
           val ref = svc.createSsd(name, onts, attrs, m)
@@ -130,10 +125,14 @@ object Cli {
           println(s"""{"deleted":${svc.deleteSsd(id.toInt)}}""")
         case _ =>
           System.err.println("unknown command; see Cli scaladoc")
-          sys.exit(2)
+          return 2
+      } catch { case e: GraftService.ClientError =>
+        System.err.println(e.getMessage)
+        return 2
       }
+      0
     case _ =>
       System.err.println("usage: graft.Cli <root> <entity> <verb> [args...]")
-      sys.exit(2)
+      2
   }
 }

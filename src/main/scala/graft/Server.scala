@@ -112,8 +112,7 @@ final class GraftHttpServer(svc: GraftService, spark: () => SparkSession) {
       StandardCharsets.UTF_8))
 
   private def datasetJson(d: graft.core.DatasetRef): String = {
-    val tables = d.tables
-      .map { case (t, cs) => s"$t:${cs.mkString(",")}" }.mkString("|")
+    val tables = graft.core.Specs.renderTables(d.tables)
     s"""{"id":${d.id},"name":${Json.str(d.name)},"dir":${Json.str(d.dir)},"tables":${Json.str(tables)}}"""
   }
 
@@ -148,14 +147,7 @@ final class GraftHttpServer(svc: GraftService, spark: () => SparkSession) {
       : (Seq[Int], Seq[graft.core.SsdAttribute], Map[String, String]) = {
     val onts = b.getOrElse("ontologies", "").split(",").toSeq
       .map(_.trim).filter(_.nonEmpty).map(_.toInt)
-    val mappings = b.getOrElse("mappings", "").split(",").toSeq
-      .map(_.trim).filter(_.nonEmpty).map { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => k -> v
-          case _ => throw new graft.core.GraftService.ClientError(
-            s"malformed mapping '$kv' (expected col=Class.property)")
-        }
-      }.toMap
+    val mappings = graft.core.Specs.mappings(b.getOrElse("mappings", ""))
     val table = b.getOrElse("table", "")
     val attrs = graft.core.Ssd
       .identity(0, table, mappings.keys.toSeq.sorted).attributes
@@ -182,15 +174,7 @@ final class GraftHttpServer(svc: GraftService, spark: () => SparkSession) {
               if name.trim.isEmpty || dir.trim.isEmpty =>
             err(ex, 400, "name and dir must be non-empty")
           case (Some(name), Some(dir)) =>
-            val tables = b.getOrElse("tables", "")
-              .split("\\|").toSeq.filter(_.nonEmpty).map { part =>
-                part.split(":", 2) match {
-                  case Array(t, cs) =>
-                    t -> cs.split(",").toSeq.filter(_.nonEmpty)
-                  case _ => return err(ex, 400,
-                    s"malformed table spec '$part' (expected t:c1,c2|t2:c3)")
-                }
-              }
+            val tables = graft.core.Specs.tables(b.getOrElse("tables", ""))
             respond(ex, 200, datasetJson(svc.createDataset(name, dir, tables)))
           case _ => err(ex, 400, "body must carry name and dir")
         }

@@ -144,21 +144,13 @@ class GraftService(val rootDir: String,
       finally s.close()
     }
 
-  private def encodeTables(tables: Seq[(String, Seq[String])]): String =
-    tables.map { case (t, cs) => s"$t:${cs.mkString(",")}" }.mkString("|")
-  private def decodeTables(s: String): Seq[(String, Seq[String])] =
-    s.split("\\|").toSeq.filter(_.nonEmpty).map { part =>
-      val Array(t, cs) = part.split(":", 2)
-      t -> cs.split(",").toSeq.filter(_.nonEmpty)
-    }
-
   // ---- dataset CRUD (reference api/DatasetAPI + DatasetStorage) -------
   def createDataset(name: String, dir: String,
       tables: Seq[(String, Seq[String])]): DatasetRef = {
     val id = nextId("datasets")
     val ref = DatasetRef(id, name, dir, tables, System.currentTimeMillis())
     writeMeta(dsDir(id), "name" -> name, "dir" -> dir,
-      "tables" -> encodeTables(tables), "created" -> ref.created.toString)
+      "tables" -> Specs.renderTables(tables), "created" -> ref.created.toString)
     ref
   }
   def datasetKeys: Seq[Int] = keysUnder("datasets")
@@ -166,7 +158,7 @@ class GraftService(val rootDir: String,
     if (!Files.exists(dsDir(id).resolve("meta.json"))) None
     else {
       val m = readMeta(dsDir(id))
-      Some(DatasetRef(id, m("name"), m("dir"), decodeTables(m("tables")),
+      Some(DatasetRef(id, m("name"), m("dir"), Specs.tables(m("tables")),
         m("created").toLong))
     }
   def deleteDataset(id: Int): Boolean = {

@@ -36,6 +36,9 @@ object Materialize {
   private val inFlight =
     new ConcurrentHashMap[String, CompletableFuture[String]]()
   private val n = new AtomicInteger()
+  /** Every directory [[scratchDir]] has handed out since the last
+    * [[reset]]. */
+  private val handedOut = ConcurrentHashMap.newKeySet[String]()
   /** The per-JVM temp root every checkpoint and scratch dir lives
     * under. A JVM shutdown hook deletes it recursively:
     * `File.deleteOnExit` would not, since the root is non-empty by
@@ -54,6 +57,7 @@ object Materialize {
   private[graft] def scratchDir(): String = {
     val dir = s"$root/t${n.incrementAndGet()}"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    handedOut.add(dir)
     dir
   }
 
@@ -115,9 +119,16 @@ object Materialize {
     }
   }
 
-  /** Drop all materialized intermediates and in-flight claims (test
-    * isolation): the next call of any key builds it afresh. */
-  def reset(): Unit = { paths.clear(); buildSecs.clear(); inFlight.clear() }
+  /** Drop all materialized intermediates and in-flight claims and
+    * delete every directory [[scratchDir]] handed out, checkpoints and
+    * scratch alike, so a JVM that starts each pass cold (a bench, a
+    * harness) does not grow [[root]]. The next call of any key builds it
+    * afresh; a frame still reading one of the deleted directories is
+    * invalid, so call this between units of work, not during one. */
+  def reset(): Unit = {
+    paths.clear(); buildSecs.clear(); inFlight.clear()
+    handedOut.removeIf { dir => Caches.deleteScratch(dir); true }: Unit
+  }
 
   /** Wall-clock seconds spent computing+writing each materialized key
     * in this JVM (one entry per first-build; reads are not counted). */

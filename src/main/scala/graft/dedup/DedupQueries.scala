@@ -73,18 +73,14 @@ object DedupQueries {
     * the much larger candidate pair stream twice. 500k vectors ≈
     * 260 MB built relation — the "few hundred MB is usually fine"
     * band of guide §3.1; sf10's 200k vectors sit under the gate, a
-    * 100-TB corpus falls back to the planner's sort-merge. */
+    * 100-TB corpus falls back to the planner's sort-merge.
+    *
+    * Measured against the plain plan under Spark's defaults (AQE on):
+    * sf1 (20k vectors, 10.6M candidate pairs), 4 cores, 6 alternating
+    * pairs in one JVM, LSH pair build + rerank: broadcast 8.15 s
+    * [IQR 8.04-8.23] vs plain 20.50 s [20.15-22.21]; the gate won 6
+    * of 6. */
   val NdRerankBroadcastMaxVectors = 500000L
-
-  /** d14: at or above this many on-disk bytes of documents parquet the
-    * incremental channel Bloom-prefilters its corpus-proportional
-    * signature/shingle join sides with filters built over the
-    * delta-proportional pair stream (guide §3.2); below, the build
-    * jobs cost more than the small shuffles they save (sf0.1 A/B —
-    * documents is ~0.6 MB there, ~57 MB at sf10). The probe is file
-    * bytes (zero Spark jobs — the stream-partition idiom), so the gate
-    * is scale-adaptive without counting anything. */
-  val D14BloomMinDocBytes: Long = 32L << 20
 
   /** d2's est pre-filter: below this many on-disk bytes of documents
     * parquet the slim (doc_id, mh) signature frame is broadcast into
@@ -92,26 +88,17 @@ object DedupQueries {
     * sf10 corpus — the d5 rerank gate's envelope), so the candidate
     * pair stream is never shuffled; at or above, the planner's
     * sort-merge stands (a 100-TB signature table must not be
-    * broadcast). Same zero-job file-size probe as [[D14BloomMinDocBytes]]
-    * (documents is ~57 MB at sf10, ~570 MB at sf100). */
+    * broadcast). The probe is [[graft.sources.Tables.fileBytes]], which
+    * starts no Spark job (documents is ~57 MB at sf10, ~570 MB at
+    * sf100).
+    *
+    * Measured against the plain plan under Spark's defaults (AQE on),
+    * 4 cores, alternating pairs in one JVM, d2 pair build with the
+    * upstream checkpoints warm: sf1 (50k docs) is a tie — broadcast
+    * 25.81 s [IQR 25.39-26.02] vs plain 25.51 s [25.26-26.09], 3 of 6
+    * each way; at sf10 (500k docs, 3.4M verified pairs) the broadcast
+    * wins — 66.94 s [66.47-68.72] vs 95.08 s [92.40-96.52], 5 of 5. */
   val D2EstBroadcastMaxDocBytes: Long = 256L << 20
-
-  /** Compressed on-disk bytes of `<dir>/<name>.parquet` — the zero-job
-    * gate probe (streamTable's idiom). Long.MaxValue when unreadable,
-    * so an unprobeable corpus (object store, remote FS) takes the
-    * large-corpus branch — the conservative choice at the scales where
-    * the probe can fail. */
-  private[graft] def tableBytes(dir: String, name: String): Long =
-    try {
-      val p = java.nio.file.Paths.get(dir, s"$name.parquet")
-      if (java.nio.file.Files.isDirectory(p)) {
-        val ls = java.nio.file.Files.list(p)
-        try ls.mapToLong(f =>
-          try java.nio.file.Files.size(f) catch { case _: Exception => 0L })
-          .sum()
-        finally ls.close()
-      } else java.nio.file.Files.size(p)
-    } catch { case _: Exception => Long.MaxValue }
 
   /** d5/d9 LSH bucket-occupancy target: bits-per-band scale with corpus
     * size so a band's expected bucket holds ~this many vectors. A FIXED
@@ -434,7 +421,7 @@ object DedupQueries {
   val SplitTrainFrac = 0.8
   val SplitValFrac = 0.1
 
-  /** Shingled documents `(doc_id, sh)` — materialized: the shingle
+  /** Shingled documents `(doc_id, sh, n, fp)` — materialized: the shingle
     * arrays are scanned by signature generation and again by the exact
     * verify, and at 100 TB this is the checkpoint a pipeline would
     * write anyway rather than re-shingling the corpus per consumer. */
@@ -453,19 +440,26 @@ object DedupQueries {
         .select(col("doc_id"), Text.words(col("text")).as("w"))
         .filter(size(col("w")) >= 2)
         .select(col("doc_id"), Text.wordShingles(col("w"), 2).as("sh"))
-        // n + 60-bit fingerprints precomputed AT THE CHECKPOINT (r16):
-        // the md5-per-shingle ran once per CONSUMER before — the
-        // signature build re-hashed every exploded shingle and each
-        // fingerprint verify (minhashPairs, d14, d18/d22) re-ran the
-        // transform over its join sides. Hashing the corpus exactly
-        // once is the §6 write-the-derived-column-once move, and
-        // column pruning lets fp-only consumers skip the gram strings
-        // at the scan entirely.
-        .withColumn("n", size(col("sh")).cast("long"))
-        .withColumn("fp",
-          expr("transform(sh, s -> " +
-            "cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint))"))
+        .transform(fingerprinted)
     }
+
+  /** `(doc_id, sh)` → `(doc_id, sh, n, fp)`: the distinct-shingle count
+    * and the per-shingle 60-bit fingerprints (conv(substr(md5, 1, 15))),
+    * as the [[shingled]] checkpoint stores them. Precomputed AT THE
+    * CHECKPOINT (r16): the md5-per-shingle ran once per CONSUMER before
+    * — the signature build re-hashed every exploded shingle and each
+    * fingerprint verify (minhashPairs, d14, d18/d22) re-ran the
+    * transform over its join sides. Hashing the corpus exactly once is
+    * the §6 write-the-derived-column-once move, and column pruning lets
+    * fp-only consumers skip the gram strings at the scan entirely.
+    * Fixture frames for the containment verify are built through this
+    * same derivation. */
+  def fingerprinted(shingles: DataFrame): DataFrame =
+    shingles
+      .withColumn("n", size(col("sh")).cast("long"))
+      .withColumn("fp",
+        expr("transform(sh, s -> " +
+          "cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint))"))
 
   /** Slim `(doc_id, mh)` minhash signature frame — materialized.
     * Signatures via explode + 64 min-aggregates instead of nested
@@ -547,7 +541,7 @@ object DedupQueries {
       // rides along — is never shuffled. Above the gate the planner's
       // sort-merge stands. Strategy-only, results unchanged.
       val estMins =
-        if (tableBytes(dir, "documents") < D2EstBroadcastMaxDocBytes)
+        if (Tables.fileBytes(dir, "documents") < D2EstBroadcastMaxDocBytes)
           broadcast(mins)
         else mins
       val est = pairs
@@ -607,10 +601,7 @@ object DedupQueries {
     }
 
   /** d14's engine: delta-vs-index incremental dedup (see the d14
-    * QueryDef comment for the channel's scale story). `bloomGateBytes`
-    * is the §3.2 prefilter gate, a PARAMETER (production default
-    * [[D14BloomMinDocBytes]]) so a spec can force the Bloom branch on
-    * a small corpus — the embeddingPairs `bruteMax` seam style.
+    * QueryDef comment for the channel's scale story).
     *
     * Join-side slice predicates: pairs carry delta ids in doc_id and
     * index ids in old_doc BY CONSTRUCTION (the band join's two sides).
@@ -618,26 +609,18 @@ object DedupQueries {
     * join sides are the predicates Catalyst's constraint propagation
     * ALSO infers through the equi-joins (verified in the committed
     * plans: the before-plan already slices every scan) — they are kept
-    * explicit because the Bloom branch must compose with them, and an
-    * optimizer-derived filter is one rewrite away from disappearing
-    * while a written one is not.
+    * explicit because an optimizer-derived filter is one rewrite away
+    * from disappearing while a written one is not.
     *
-    * The Bloom prefilter is the r16 addition (guide §3.2): above the
-    * gate (zero-job file-size probe — the stream-partition idiom), the
-    * signature/shingle join sides are additionally prefiltered with
-    * Bloom filters built over the pair stream's two id columns. At
-    * ingest scale the pair stream is delta-proportional while the
-    * signature and shingle tables are corpus-proportional, so probing
-    * ~nPairs ids drops the non-colliding bulk of BOTH tables before
-    * anything is shuffled — the slice predicates alone still shuffle
-    * the whole 1/DeltaMod and (DeltaMod-1)/DeltaMod corpus slices.
-    * False positives only re-admit rows the joins drop; the pair table
-    * is persisted so the two builds + count reuse one computation.
-    * Below the gate the builds cost more than the small shuffles they
-    * save (sf0.1 A/B: 1.90 -> 1.87 s without bloom, i.e. the plain
-    * branch is already optimal there) — slice filters only. */
-  def incrementalDedup(s: SparkSession, dir: String,
-      bloomGateBytes: Long = D14BloomMinDocBytes): DataFrame = {
+    * No hand-built Bloom prefilter on the join sides: a size-gated
+    * branch that built two Bloom filters over the persisted pair
+    * stream lost to this plain plan under Spark's defaults (AQE and
+    * runtime filters on) in a same-window A/B (4 cores, alternating
+    * pairs in one JVM, upstream checkpoints warm): sf1 Bloom 12.25 s
+    * [IQR 11.95-12.88] vs plain 10.46 s [10.05-10.70], plain faster in
+    * 6 of 6; sf10 Bloom 30.79 s [27.00-34.65] vs plain 26.24 s
+    * [24.49-28.19], plain faster in 5 of 5. */
+  def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
     val mins = signatures(s, dir)
     val capped = cappedBanded(s, dir)
     val isDelta = col("doc_id") % DeltaMod === 0
@@ -645,30 +628,15 @@ object DedupQueries {
     // only the delta side is computed per ingest
     val index = capped.filter(!isDelta)
     val delta = capped.filter(isDelta)
-    val pairs0 = delta.as("d")
+    val pairs = delta.as("d")
       .join(index.as("o"), col("d.bk") === col("o.bk"))
       .select(col("d.doc_id").as("doc_id"),
         col("o.doc_id").as("old_doc"))
       .distinct()
-    val (pairs, deltaPred, oldPred) =
-      if (tableBytes(dir, "documents") < bloomGateBytes)
-        (pairs0, isDelta, !isDelta)
-      else {
-        val pc = pairs0.pipelineCache()
-        val nP = math.max(pc.count(), 1L)
-        val bNew = s.sparkContext.broadcast(
-          pc.stat.bloomFilter("doc_id", nP, 0.01))
-        val bOld = s.sparkContext.broadcast(
-          pc.stat.bloomFilter("old_doc", nP, 0.01))
-        val mightNew = udf((id: Long) => bNew.value.mightContainLong(id))
-        val mightOld = udf((id: Long) => bOld.value.mightContainLong(id))
-        (pc.toDF(), isDelta && mightNew(col("doc_id")),
-          !isDelta && mightOld(col("doc_id")))
-      }
     val est = pairs
-      .join(mins.filter(deltaPred)
+      .join(mins.filter(isDelta)
         .select(col("doc_id"), col("mh").as("mh1")), "doc_id")
-      .join(mins.filter(oldPred)
+      .join(mins.filter(!isDelta)
         .select(col("doc_id").as("old_doc"),
           col("mh").as("mh2")), "old_doc")
       // native match count (d2's est idiom — see MinHashMatchCount)
@@ -681,13 +649,11 @@ object DedupQueries {
     // there): longs shipped instead of gram strings, arithmetic union;
     // same integers, same quotient double, twin left on raw grams
     val slim = shingleFps(shingled(s, dir))
-    // est ⊆ pairs, so the pair-id predicates (and blooms) remain
-    // valid supersets for the verify sides — no second build
     val verified = est
-      .join(slim.filter(deltaPred)
+      .join(slim.filter(isDelta)
         .select(col("doc_id"), col("n").as("n1"), col("fp").as("fp1")),
         "doc_id")
-      .join(slim.filter(oldPred)
+      .join(slim.filter(!isDelta)
         .select(col("doc_id").as("old_doc"),
           col("n").as("n2"), col("fp").as("fp2")), "old_doc")
       .withColumn("inter",
@@ -3018,22 +2984,14 @@ object DedupQueries {
     * compute the SAME fingerprints, so engine and oracle stay
     * hash-identical by construction. */
   private def shingleFps(docs: DataFrame): DataFrame =
-    // since r16 `n` and `fp` are precomputed columns of the shingled
-    // checkpoint (hash-the-corpus-once; see [[shingled]]) — for
-    // checkpoint-derived frames this is a pure column selection and
-    // parquet pruning drops the gram strings at the scan. Frames
-    // carrying only (doc_id, sh) — spec fixtures and ad-hoc verify
-    // inputs — get the fingerprints computed inline as before.
-    if (docs.columns.contains("fp"))
-      docs.select(col("doc_id"), col("n"), col("fp"))
-    else
-      docs.select(col("doc_id"), size(col("sh")).cast("long").as("n"),
-        expr("transform(sh, s -> " +
-          "cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint))")
-          .as("fp"))
+    // a pure column selection: `docs` is [[shingled]]-shaped (see
+    // [[fingerprinted]]), and parquet pruning drops the gram strings
+    // at the scan
+    docs.select(col("doc_id"), col("n"), col("fp"))
 
   /** The exact containment verify over ANY ordered candidate-pair
-    * frame (integer gate; see d18's doc comment). */
+    * frame (integer gate; see d18's doc comment). `docs` carries the
+    * [[fingerprinted]] columns `(doc_id, n, fp)`. */
   def containmentVerify(cands: DataFrame, docs: DataFrame): DataFrame = {
     val slim = shingleFps(docs)
     cands

@@ -49,10 +49,10 @@ object FeatureMatrix {
     profileCols ++ typeOneHotCols ++ nameFeatureCols
 
   /** (query_col, prop_*..., min_dist_*...) name features for a set of
-    * column ids against the labelled pool (tiny frames — broadcast
-    * joins, O(#columns x #pool) work). */
-  def nameFeatures(cols: DataFrame, pool: DataFrame): DataFrame =
-    ExampleFeatures.knn(cols, pool, NameK, Labels.classes)
+    * column ids against the labelled pool with `k` neighbours (tiny
+    * frames — broadcast joins, O(#columns x #pool) work). */
+  def nameFeatures(cols: DataFrame, pool: DataFrame, k: Int = NameK): DataFrame =
+    ExampleFeatures.knn(cols, pool, k, Labels.classes)
       .join(ExampleFeatures.minClassDistance(cols, pool, Labels.classes),
         "query_col")
 
@@ -146,10 +146,7 @@ object FeatureMatrix {
         .toDF("col_name")
       val pool = Labels.train
         .map { case (t, c, l) => (s"$t.$c", l) }.toDF("col_name", "label")
-      val nf = ExampleFeatures.knn(colsDf, pool, config.knnNeighbours,
-          Labels.classes)
-        .join(ExampleFeatures.minClassDistance(colsDf, pool, Labels.classes),
-          "query_col")
+      val nf = nameFeatures(colsDf, pool, config.knnNeighbours)
       out = out.join(nf, col("col_name") === nf("query_col"))
     }
     out.select(col("col_name") +: config.featureCols.map(c =>

@@ -75,42 +75,6 @@ object SemanticTypeClassifier {
     pipeline.fit(weighted.repartition(1).sortWithinPartitions("col_name"))
   }
 
-  /** Optional k-fold cross-validated training over a depth x trees x
-    * impurity grid (reference TrainMlibSemanticTypeClassifier.scala:
-    * 93-143, seed 10857171 — off by default there and here; train()
-    * is the default path). */
-  def trainWithCV(labelled: DataFrame, folds: Int = 3): PipelineModel = {
-    import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-    import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
-    val indexer = new StringIndexer()
-      .setInputCol("label").setOutputCol("label_idx")
-      .setStringOrderType("alphabetAsc")
-    val assembler = new VectorAssembler()
-      .setInputCols(FeatureMatrix.featureCols.toArray)
-      .setOutputCol("features")
-    val rf = new RandomForestClassifier()
-      .setLabelCol("label_idx").setFeaturesCol("features").setSeed(Seed)
-    val converter = new IndexToString()
-      .setInputCol("prediction").setOutputCol("predicted_label")
-      .setLabels(labelled.select("label").distinct()
-        .orderBy("label").collect().map(_.getString(0)))
-    val pipeline = new Pipeline()
-      .setStages(Array(indexer, assembler, rf, converter))
-    val grid = new ParamGridBuilder()
-      .addGrid(rf.maxDepth, Array(5, 10))
-      .addGrid(rf.numTrees, Array(32, 128))
-      .build()
-    val cv = new CrossValidator()
-      .setEstimator(pipeline)
-      .setEvaluator(new MulticlassClassificationEvaluator()
-        .setLabelCol("label_idx").setMetricName("accuracy"))
-      .setEstimatorParamMaps(grid)
-      .setNumFolds(folds)
-      .setSeed(10857171L)
-    cv.fit(labelled.repartition(1).sortWithinPartitions("col_name"))
-      .bestModel.asInstanceOf[PipelineModel]
-  }
-
   /** Predict labels for a feature frame; returns col_name, predicted
     * label, confidence, and the per-class score map (reference
     * ColumnPrediction, ModelTypes.scala:281-295). */

@@ -38,35 +38,42 @@ object LayoutQueries {
   private def ident(dir: String): String =
     math.abs(dir.hashCode).toString
 
+  /** The layout dir built under `key`, building it with `write` when
+    * absent or when [[graft.core.Materialize.reset]] deleted it. */
+  private def layout(key: String)(write: String => Unit): String =
+    built.compute(key, (_, old) =>
+      if (old != null && new java.io.File(old).isDirectory) old
+      else {
+        val root = graft.core.Materialize.scratchDir()
+        write(root)
+        root
+      })
+
   /** Write the bucketed twin tables once per JVM per sf dir; returns the
     * (orders, lineitem) catalog table names. Bucket metadata lives in
     * the session catalog, so this also registers the tables. */
   def bucketedTables(s: SparkSession, dir: String): (String, String) = {
     val id = ident(dir)
     val (ot, lt) = (s"orders_b_$id", s"lineitem_b_$id")
-    built.computeIfAbsent(s"bucketed|$dir", _ => {
-      val root = graft.core.Materialize.scratchDir()
+    layout(s"bucketed|$dir") { root =>
       Tables.table(s, dir, "orders")
         .write.bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$root/orders").mode("overwrite").saveAsTable(ot)
       Tables.table(s, dir, "lineitem")
         .write.bucketBy(Buckets, "l_orderkey").sortBy("l_orderkey")
         .option("path", s"$root/lineitem").mode("overwrite").saveAsTable(lt)
-      root
-    })
+    }
     (ot, lt)
   }
 
   /** Write the month-partitioned orders layout once per JVM per sf dir;
     * returns its path. */
   def partitionedOrders(s: SparkSession, dir: String): String =
-    built.computeIfAbsent(s"partitioned|$dir", _ => {
-      val root = graft.core.Materialize.scratchDir()
+    layout(s"partitioned|$dir") { root =>
       Tables.table(s, dir, "orders")
         .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
         .write.partitionBy("o_month").mode("overwrite").parquet(root)
-      root
-    })
+    }
 
   private def money(c: org.apache.spark.sql.Column) =
     round(sum(c.cast(DecimalType(25, 6))).cast("double"), 2)

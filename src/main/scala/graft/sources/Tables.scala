@@ -60,6 +60,23 @@ object Tables {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
+  /** Compressed on-disk bytes of `<dir>/<name>.parquet` (a file or a
+    * directory of part files) — a size probe that starts no Spark job.
+    * Long.MaxValue when unreadable, so an unprobeable table (object
+    * store, remote FS) is treated as large. */
+  def fileBytes(dir: String, name: String): Long =
+    try {
+      val p = java.nio.file.Paths.get(dir, s"$name.parquet")
+      if (java.nio.file.Files.isDirectory(p)) {
+        // Files.list must be closed — it holds a directory handle
+        val ls = java.nio.file.Files.list(p)
+        try ls.mapToLong(f =>
+          try java.nio.file.Files.size(f) catch { case _: Exception => 0L })
+          .sum()
+        finally ls.close()
+      } else java.nio.file.Files.size(p)
+    } catch { case _: Exception => Long.MaxValue }
+
   /** All tables as a name->DataFrame map. */
   def all(spark: SparkSession, dir: String): Map[String, DataFrame] =
     names.map(n => n -> table(spark, dir, n)).toMap

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -10,12 +8,13 @@ import graft.QueryDef
 import graft.sources.Tables
 
 /** Harness-visible Structured-Streaming queries: each runs a REAL
-  * streaming query (parquet file source → Trigger.AvailableNow → memory
-  * sink) and returns the sink table, so the driver's DuckDB oracle
-  * checks the stream's output value-exactly against the batch SQL
-  * answer. This pins the batch/stream unification contract end-to-end —
-  * not just "a streaming variant exists" (the §2.13 specs) but "the
-  * stream computes the same answer as the warehouse would".
+  * streaming query (parquet file source → Trigger.AvailableNow →
+  * idempotent per-batch parquet sink) and returns the sink's contents,
+  * so the DuckDB oracle checks the stream's output
+  * value-exactly against the batch SQL answer. This pins the
+  * batch/stream unification contract end-to-end — not just "a streaming
+  * variant exists" (the §2.13 specs) but "the stream computes the same
+  * answer as the warehouse would".
   *
   * Scale notes (the reason each shape is 100-TB-safe):
   *  - st1: watermarked append-mode windowed aggregation — state is
@@ -36,8 +35,6 @@ import graft.sources.Tables
   *    its batch backfill are identical by construction.
   */
 object StreamingQueries {
-
-  private val runId = new AtomicInteger(0)
 
   /** Compressed input bytes per stream shuffle/state partition. AQE is
     * DISABLED for stateful streaming (Spark refuses to re-plan a state
@@ -106,39 +103,26 @@ object StreamingQueries {
     if (name == "events")
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = s.read.parquet(s"$dir/$name.parquet").schema
-    suggestStreamParts(s, try {
-      val p = java.nio.file.Paths.get(dir, s"$name.parquet")
-      if (java.nio.file.Files.isDirectory(p)) {
-        // Files.list must be closed — it holds a directory handle
-        val ls = java.nio.file.Files.list(p)
-        try ls.mapToLong(f =>
-          try java.nio.file.Files.size(f) catch { case _: Exception => 0L })
-          .sum()
-        finally ls.close()
-      } else java.nio.file.Files.size(p)
-    } catch { case _: Exception => Long.MaxValue })
+    suggestStreamParts(s, Tables.fileBytes(dir, name))
     val src = s.readStream.schema(raw).option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", s"$name.parquet").parquet(dir)
     if (name == "events") Tables.normalizeEventsTs(src) else src
   }
 
-  /** Run `df` as a streaming query until all available input is
-    * processed (Trigger.AvailableNow, which also runs the final
+  /** Run `df` as an append-mode streaming query until all available
+    * input is processed (Trigger.AvailableNow, which also runs the final
     * no-data batch that advances the watermark and flushes closed
     * windows), then return the sink contents.
     *
-    * Sink selection: the default memory sink is the ORACLE harness —
-    * the driver reads the sink table and compares it to DuckDB, and at
-    * oracle scale results are tiny. But a memory sink collects the
-    * whole result into the driver, so at rehearsal scale (sf100: 60M
-    * sessions) it measures driver collection and maxResultSize walls,
-    * not the operator. `SPARK_GRAFT_STREAM_SINK=parquet` switches
-    * rehearsals to what production runs: foreachBatch writing each
-    * micro-batch to a scratch parquet dir (executor-side IO, nothing
-    * through the driver), returned as a plain parquet read. One-shot
-    * rehearsal JVMs leave the scratch dirs to /tmp cleanup. */
-  private def runStream(df: DataFrame, mode: String): DataFrame = {
-    val nm = s"graft_stream_${runId.incrementAndGet()}"
+    * The sink is what production runs: foreachBatch writing each
+    * micro-batch to a scratch parquet dir under
+    * [[graft.core.Materialize.scratchDir]] (executor-side IO, nothing
+    * collected through the driver), returned as a plain parquet read.
+    * The oracle reads the same frame as every other query. A memory sink
+    * would hold every result in the driver for the life of the JVM, and
+    * at sf10 it was also the slower harness (st2 34.7 → 13.9 s, st8
+    * 31.1 → 7.3 s with this sink, PERF.md). */
+  private def runStream(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     // Apply the size-derived partition suggestion (see
     // [[StreamPartBytes]]) on a CLONED session: the value is
@@ -165,41 +149,29 @@ object StreamingQueries {
         s2.conf.set("spark.sql.shuffle.partitions", p.toString)
         val df2 = org.apache.spark.sql.GraftExpressionBridge
           .withSession(s2, df)
-        runStreamInner(df2, mode, nm, s2)
-      case None => runStreamInner(df, mode, nm, spark)
+        runToParquet(df2, s2)
+      case None => runToParquet(df, spark)
     }
   }
 
-  private def runStreamInner(df: DataFrame, mode: String, nm: String,
-      spark: SparkSession): DataFrame = {
-    // system property first so the sink-parity spec can flip it in-JVM
-    val sink = sys.props.get("graft.stream.sink")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_SINK"))
-    if (sink.contains("parquet")) {
-      val dir = graft.core.Materialize.scratchDir()
-      // foreachBatch is AT-LEAST-ONCE: a micro-batch re-executed after
-      // a task/executor failure (plausible at rehearsal scale) must not
-      // double-append. Each batch overwrites its own batchId-keyed
-      // subdir, so a retry replaces its previous attempt — idempotent
-      // without a transactional sink
-      val write: (DataFrame, Long) => Unit = (batch, id) =>
-        batch.write.mode("overwrite").parquet(s"$dir/b$id")
-      val q = df.writeStream.foreachBatch(write)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      // an empty stream never fires foreachBatch: no subdirs → typed empty
-      val wrote = new java.io.File(dir).listFiles().exists(_.isDirectory)
-      if (wrote) spark.read.schema(df.schema)
-        .option("recursiveFileLookup", "true").parquet(dir)
-      else spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        df.schema)
-    } else {
-      val q = df.writeStream.format("memory").queryName(nm)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(nm)
-    }
+  private def runToParquet(df: DataFrame, spark: SparkSession): DataFrame = {
+    val dir = graft.core.Materialize.scratchDir()
+    // foreachBatch is AT-LEAST-ONCE: a micro-batch re-executed after a
+    // task/executor failure must not double-append. Each batch
+    // overwrites its own batchId-keyed subdir, so a retry replaces its
+    // previous attempt — idempotent without a transactional sink
+    val write: (DataFrame, Long) => Unit = (batch, id) =>
+      batch.write.mode("overwrite").parquet(s"$dir/b$id")
+    val q = df.writeStream.foreachBatch(write)
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    // an empty stream never fires foreachBatch: no subdirs → typed empty
+    val wrote = new java.io.File(dir).listFiles().exists(_.isDirectory)
+    if (wrote) spark.read.schema(df.schema)
+      .option("recursiveFileLookup", "true").parquet(dir)
+    else spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      df.schema)
   }
 
   private def dsum(c: org.apache.spark.sql.Column) =
@@ -576,7 +548,7 @@ object StreamingQueries {
     // open and is not emitted — st2/st9's gate semantics).
     "st1_stream_event_rollup" -> QueryDef(
       (s, dir) => {
-        runStream(st1Stream(s, dir), "append")
+        runStream(st1Stream(s, dir))
           .orderBy(col("day"), col("event_type"))
       },
       Some("""WITH d AS (
@@ -598,7 +570,7 @@ object StreamingQueries {
     // when the gap is >= 30 min, exact microseconds) and the emission
     // gate (only sessions whose end the final watermark passed are out).
     "st2_stream_sessions" -> QueryDef(
-      (s, dir) => runStream(st2Stream(s, dir), "append"),
+      (s, dir) => runStream(st2Stream(s, dir)),
       Some(s"""WITH g AS (
           SELECT user_id, ts,
             CASE WHEN lag(ts) OVER w IS NULL
@@ -624,12 +596,12 @@ object StreamingQueries {
     // ---- st3: streaming exact-dedup — distinct content fingerprints
     // via streaming dropDuplicates (state = fingerprint keys only)
     "st3_stream_distinct_docs" -> QueryDef(
-      (s, dir) => runStream(st3Stream(s, dir), "append"),
+      (s, dir) => runStream(st3Stream(s, dir)),
       Some("SELECT DISTINCT md5(text) AS fingerprint FROM documents")),
 
     // ---- st4: streaming quality gate + PII scrub (stateless pass)
     "st4_stream_quality_scrub" -> QueryDef(
-      (s, dir) => runStream(st4Stream(s, dir), "append"),
+      (s, dir) => runStream(st4Stream(s, dir)),
       Some(s"""WITH d AS (
           SELECT doc_id, text,
             regexp_extract_all(lower(text), '[a-z0-9]+') AS w FROM documents
@@ -665,7 +637,7 @@ object StreamingQueries {
     // side is constant.
     "st5_stream_decontaminate" -> QueryDef(
       (s, dir) => {
-        runStream(st5Stream(s, dir), "append")
+        runStream(st5Stream(s, dir))
           .filter(col("n_shared_ngrams") > 0).orderBy(col("doc_id"))
       },
       // d7's oracle restricted to contaminated docs (the oracle's inner
@@ -702,7 +674,7 @@ object StreamingQueries {
     // flag-now/resolve-later split production dedup pipelines use.
     "st6_stream_semantic_flag" -> QueryDef(
       (s, dir) => {
-        runStream(st6Stream(s, dir), "append").orderBy(col("vec_id"))
+        runStream(st6Stream(s, dir)).orderBy(col("vec_id"))
       },
       // d11's oracle chain minus the representative rank: assignment +
       // integer sums + the same double cosine, flag only
@@ -747,7 +719,7 @@ object StreamingQueries {
     // (paraphrases) at O(bands) integer work per doc.
     "st7_stream_fuzzy_flag" -> QueryDef(
       (s, dir) => {
-        runStream(st7Stream(s, dir), "append")
+        runStream(st7Stream(s, dir))
           .filter(col("n_band_hits") > 0).orderBy(col("doc_id"))
       },
       // d2's signature/band CTE chain, restricted to train-side docs
@@ -773,7 +745,7 @@ object StreamingQueries {
     // bucket's INDEX rows are dropped either way.
     "st8_stream_incremental_dedup" -> QueryDef(
       (s, dir) => {
-        runStream(st8Stream(s, dir), "append")
+        runStream(st8Stream(s, dir))
           .groupBy(col("doc_id"))
           .agg(count_distinct(col("old_doc")).as("n_candidates"),
             min(col("old_doc")).as("fc"))
@@ -815,7 +787,7 @@ object StreamingQueries {
     //      stays open and is not emitted). Numerics: decimal-exact
     //      sums, one IEEE division per side, identical in DuckDB.
     "st9_stream_drift_monitor" -> QueryDef(
-      (s, dir) => runStream(st9Stream(s, dir), "append")
+      (s, dir) => runStream(st9Stream(s, dir))
         .orderBy(col("day"), col("event_type")),
       Some(s"""WITH base AS (
         SELECT event_type,
@@ -849,7 +821,7 @@ object StreamingQueries {
     //      d8's hash split), restricted to delta non-eval docs.
     "st10_stream_pipeline_admission" -> QueryDef(
       (s, dir) => {
-        runStream(st10Stream(s, dir), "append").orderBy(col("doc_id"))
+        runStream(st10Stream(s, dir)).orderBy(col("doc_id"))
       },
       Some {
         import graft.dedup.DedupQueries.{DecontamN, DeltaMod,
@@ -916,7 +888,7 @@ object StreamingQueries {
     //      work per arrival at any stream lifetime.
     "st11_stream_mixture_sampler" -> QueryDef(
       (s, dir) => {
-        runStream(st11Stream(s, dir), "append").orderBy(col("doc_id"))
+        runStream(st11Stream(s, dir)).orderBy(col("doc_id"))
       },
       Some {
         import graft.dedup.DedupQueries.DeltaMod
@@ -951,7 +923,7 @@ object StreamingQueries {
     //      carry NULL oov share, never a divide-by-zero.
     "st12_stream_oov_monitor" -> QueryDef(
       (s, dir) => {
-        runStream(st12Stream(s, dir), "append").orderBy(col("doc_id"))
+        runStream(st12Stream(s, dir)).orderBy(col("doc_id"))
       },
       Some {
         import graft.dedup.DedupQueries.DeltaMod
@@ -997,7 +969,7 @@ object StreamingQueries {
     //      (conservative — an alert pass owns the unseen-source case).
     "st13_stream_quality_monitor" -> QueryDef(
       (s, dir) => {
-        runStream(st13Stream(s, dir), "append").orderBy(col("doc_id"))
+        runStream(st13Stream(s, dir)).orderBy(col("doc_id"))
       },
       Some {
         import graft.dedup.DedupQueries.DeltaMod
@@ -1039,7 +1011,7 @@ object StreamingQueries {
     //      nothing (they have no blocks to admit).
     "st14_stream_block_scrub" -> QueryDef(
       (s, dir) => {
-        runStream(st14Stream(s, dir), "append")
+        runStream(st14Stream(s, dir))
           .orderBy(col("doc_id"), col("block_idx"))
       },
       Some {

@@ -118,7 +118,7 @@ class AdversarialParitySpec extends SparkSpec {
   /** Fixture dir: the adversarial documents table plus the other
     * sf0.001 tables (so every query's inputs resolve). Built once. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-adversarial").toString
+    val d = tempDir("graft-adversarial").toString
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "embeddings"))
       Files.copy(Paths.get(s"$srcDir/$t.parquet"),
@@ -139,7 +139,7 @@ class AdversarialParitySpec extends SparkSpec {
     // single FILE named documents.parquet (the driver's layout) — the
     // streaming file source glob-filters on that exact file name, so a
     // directory-shaped table would stream zero rows
-    val scratch = Files.createTempDirectory("graft-adv-docs").toString
+    val scratch = tempDir("graft-adv-docs").toString
     spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema)
       .write.mode("overwrite").parquet(scratch)
@@ -1119,7 +1119,7 @@ class AdversarialParitySpec extends SparkSpec {
       (200L, "lone0 lone1 lone2 lone3 lone4 lone5 lone6 lone7 lone8"),
       (201L, "solo0 solo1 solo2 solo3 solo4 solo5 solo6 solo7 solo8"),
       (202L, "only0 only1 only2 only3 only4 only5 only6 only7 only8"))
-    val d = Files.createTempDirectory("graft-d24").toString
+    val d = tempDir("graft-d24").toString
     val sparkS = spark
     import sparkS.implicits._
     (pairDocs ++ singles).toDF("doc_id", "text")
@@ -1159,7 +1159,7 @@ class AdversarialParitySpec extends SparkSpec {
       anchors.zipWithIndex.flatMap { case (v, i) =>
         Seq((i.toLong, v.toSeq, 0), (100L + i, v.toSeq, 0)) } ++
       singles.zipWithIndex.map { case (v, i) => (200L + i, v.toSeq, 1) }
-    val d = Files.createTempDirectory("graft-d25").toString
+    val d = tempDir("graft-d25").toString
     val sparkS = spark
     import sparkS.implicits._
     rows.toDF("vec_id", "embedding", "label")

@@ -66,7 +66,7 @@ class EdgeCaseSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((1L, "only one tiny document", "en", "src0", 22L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-edge").toString
+    val dir = tempDir("graft-edge").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val d1 = SparkEntry.queries("d1_exact_dedup")(spark, dir).collect()
     assert(d1.length === 1 && d1.head.getAs[Long]("is_dup") === 0L)

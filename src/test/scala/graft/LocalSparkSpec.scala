@@ -50,9 +50,10 @@ class LocalSparkSpec extends AnyFunSuite {
     assert(builders === Seq("src/main/scala/graft/LocalSpark.scala"),
       "every main must build its session through graft.LocalSpark")
     for (knob <- Seq("SPARK_GRAFT_ND_TARGET_BUCKET",
-        "SPARK_GRAFT_STREAM_PART_BYTES", "SPARK_GRAFT_EVAL_EXACT_MAX")) {
+        "SPARK_GRAFT_STREAM_PART_BYTES", "SPARK_GRAFT_EVAL_EXACT_MAX",
+        "SPARK_GRAFT_STREAM_SINK", "graft.stream.sink")) {
       val users = texts.collect { case (f, t) if t.contains(knob) => f }
-      assert(users.isEmpty, s"$knob is a constant now, yet read in $users")
+      assert(users.isEmpty, s"$knob is removed, yet read in $users")
     }
   }
 }

@@ -1,12 +1,29 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for specs. */
+/** Shared local SparkSession for specs (built on first use), plus
+  * per-suite temp dirs that are deleted when the suite ends. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp dir named after `prefix`, deleted with its contents
+    * in [[afterAll]]. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => graft.core.Caches.deleteScratch(d.toString))
+    finally super.afterAll()
 }
 
 object SparkSpec {

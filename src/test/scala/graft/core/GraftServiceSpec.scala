@@ -12,7 +12,7 @@ class GraftServiceSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("dataset and model CRUD round-trips on disk") {
-    val root = java.nio.file.Files.createTempDirectory("graft-svc").toString
+    val root = tempDir("graft-svc").toString
     val svc = new GraftService(root)
     assert(svc.datasetKeys.isEmpty && svc.modelKeys.isEmpty)
     val ds = svc.createDataset("holdout", sf, Labels.holdoutTables)
@@ -30,7 +30,7 @@ class GraftServiceSpec extends SparkSpec {
   }
 
   test("register -> train -> predict -> suggestions end to end") {
-    val root = java.nio.file.Files.createTempDirectory("graft-svc-e2e").toString
+    val root = tempDir("graft-svc-e2e").toString
     val svc = new GraftService(root,
       knownModels = Seq(ModelerQueries.knownOrderModel))
     val train = svc.createDataset("train", sf, Labels.trainTables)
@@ -65,7 +65,7 @@ class GraftServiceSpec extends SparkSpec {
 
   test("a record rewrite is never read half-written (a GET polling a " +
       "training model's state)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-meta").toString
+    val root = tempDir("graft-meta").toString
     val svc = new GraftService(root)
     val owl = svc.createOwl("tpch", "v0", "ttl",
       graft.modeler.Ontology.tpchTurtle)
@@ -89,7 +89,7 @@ class GraftServiceSpec extends SparkSpec {
 
   test("owl + ssd CRUD: store round-trip, validation, dependent-delete " +
       "refusal (reference OwlStorage/SsdStorage + OwlInterface.dependents)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-owl").toString
+    val root = tempDir("graft-owl").toString
     val svc = new GraftService(root)
     import graft.modeler.Ontology
 
@@ -158,7 +158,7 @@ class GraftServiceSpec extends SparkSpec {
   }
 
   test("train on a missing dataset fails loudly") {
-    val root = java.nio.file.Files.createTempDirectory("graft-svc-err").toString
+    val root = tempDir("graft-svc-err").toString
     val svc = new GraftService(root)
     val model = svc.createModel("m")
     intercept[NoSuchElementException] {

@@ -63,6 +63,27 @@ class MaterializeSpec extends SparkSpec {
     if (kids == null) Set.empty else kids.toSet
   }
 
+  test("reset() deletes every dir it handed out: checkpoints, scratch " +
+      "and layouts; a layout query rebuilds its dir afterwards") {
+    import spark.implicits._
+    val sf = tempDir("graft-reset").toString
+    Seq((1L, java.sql.Date.valueOf("1995-03-01")),
+        (2L, java.sql.Date.valueOf("1995-04-01")))
+      .toDF("o_orderkey", "o_orderdate").write.parquet(s"$sf/orders.parquet")
+    Materialize(spark, s"spec-reset-${System.nanoTime}") {
+      spark.range(3).toDF("id")
+    }.count()
+    val scratch = Materialize.scratchDir()
+    val layout = graft.relational.LayoutQueries.partitionedOrders(spark, sf)
+    assert(builtDirs.contains(new java.io.File(scratch).getName))
+    Materialize.reset()
+    assert(builtDirs.filter(_.matches("t\\d+")) === Set.empty,
+      "reset left checkpoint or scratch dirs behind")
+    val again = graft.relational.LayoutQueries.partitionedOrders(spark, sf)
+    assert(again != layout && new java.io.File(again).isDirectory)
+    assert(spark.read.parquet(again).count() === 2L)
+  }
+
   test("single-flight: 8 concurrent callers of one key share one build") {
     val key = s"spec-flight-${System.nanoTime}"
     val computes = new java.util.concurrent.atomic.AtomicInteger

@@ -9,7 +9,7 @@ class OctopusSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("octopus trains both legs, persists, predicts, and reloads") {
-    val work = java.nio.file.Files.createTempDirectory("graft-octopus").toString
+    val work = tempDir("graft-octopus").toString
     val oct = new Octopus(Ontology.tpch,
       Seq(ModelerQueries.knownOrderModel), work)
     assert(oct.trainState === Octopus.Untrained)
@@ -39,7 +39,7 @@ class OctopusSpec extends SparkSpec {
 
   test("training legs run concurrently (reference two-Future overlap)") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
-    val work = java.nio.file.Files.createTempDirectory("graft-conc").toString
+    val work = tempDir("graft-conc").toString
     // each leg signals its start, then waits for the OTHER leg to have
     // started: completion is only possible if both run at once. The
     // timeout makes a sequential implementation fail, not hang.
@@ -66,7 +66,7 @@ class OctopusSpec extends SparkSpec {
 
   test("single-leg failures map to Error through the 4-way state matrix") {
     def octWith(failMatcher: Boolean, failAlign: Boolean) = {
-      val work = java.nio.file.Files.createTempDirectory("graft-fail").toString
+      val work = tempDir("graft-fail").toString
       new Octopus(Ontology.tpch, Seq(ModelerQueries.knownOrderModel), work) {
         override protected def trainMatcherLeg(
             s: org.apache.spark.sql.SparkSession, d: String) = {
@@ -98,7 +98,7 @@ class OctopusSpec extends SparkSpec {
     import graft.matcher.FeaturesConfig
     import graft.modeler.SemanticModeler
     def mkOct(typeMap: Map[String, (String, String)]) = {
-      val work = java.nio.file.Files.createTempDirectory("graft-g5").toString
+      val work = tempDir("graft-g5").toString
       val o = new Octopus(Ontology.tpch, Seq(ModelerQueries.knownOrderModel),
         work, FeaturesConfig.Default, typeMap)
       assert(o.train(spark, sf) === Octopus.Complete)

@@ -37,7 +37,7 @@ class ServerSpec extends SparkSpec {
   }
 
   test("dataset/model lifecycle over HTTP: CRUD, train, predict") {
-    val root = java.nio.file.Files.createTempDirectory("graft-http").toString
+    val root = tempDir("graft-http").toString
     val svc = new GraftService(root,
       knownModels = Seq(ModelerQueries.knownOrderModel))
     val server = new GraftHttpServer(svc, () => spark)
@@ -129,7 +129,7 @@ class ServerSpec extends SparkSpec {
   }
 
   test("malformed request bodies get 400 with a parse diagnostic, never 500") {
-    val root = java.nio.file.Files.createTempDirectory("graft-http-bad").toString
+    val root = tempDir("graft-http-bad").toString
     val server = new GraftHttpServer(new GraftService(root), () => spark)
     val port = server.start()
     val base = s"http://127.0.0.1:$port"
@@ -176,7 +176,7 @@ class ServerSpec extends SparkSpec {
       "from the UPLOADED ontology (closes S11: the reference's first " +
       "user workflow, Serene.scala:49-56 OwlAPI/SsdAPI)") {
     import graft.modeler.Ontology
-    val root = java.nio.file.Files.createTempDirectory("graft-http-owl").toString
+    val root = tempDir("graft-http-owl").toString
     // the service default ontology is EMPTY on purpose: any ontology
     // vocabulary that shows up in suggestions can then only have come
     // from the uploaded owl document, proving the octopus resolved the
@@ -318,7 +318,7 @@ class ServerSpec extends SparkSpec {
       "answered while a predict is held") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     import org.apache.spark.sql.SparkSession
-    val root = java.nio.file.Files.createTempDirectory("graft-http-conc").toString
+    val root = tempDir("graft-http-conc").toString
     val entered, release = new CountDownLatch(1)
     @volatile var hold = false
     // holds a predict inside the service until the test lets it go, so

@@ -49,7 +49,8 @@ class ContainmentPropSpec extends SparkSpec {
           explode(Text.bandKeys(col("mh"),
             DedupQueries.Bands, DedupQueries.Rows)).as("bk0"))
         .select(col("doc_id"), unhex(col("bk0")).as("bk"))
-      val got = DedupQueries.containmentPairs(banded, f.select("doc_id", "sh"))
+      val got = DedupQueries.containmentPairs(banded,
+          DedupQueries.fingerprinted(f.select("doc_id", "sh")))
         .collect()
         .map(r => (r.getAs[Long]("doc1"), r.getAs[Long]("doc2")) ->
           (r.getAs[Long]("n1"), r.getAs[Long]("n2"),
@@ -71,7 +72,8 @@ class ContainmentPropSpec extends SparkSpec {
   test("empty band index: empty result, no throw") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Array[Byte])].toDF("doc_id", "bk")
-    val docs = Seq((1L, Seq("a b"))).toDF("doc_id", "sh")
+    val docs = DedupQueries.fingerprinted(
+      Seq((1L, Seq("a b"))).toDF("doc_id", "sh"))
     assert(DedupQueries.containmentPairs(empty, docs).count() === 0L)
   }
 }

@@ -42,7 +42,7 @@ class ContainmentRecallSpec extends SparkSpec {
       docs += ((id + 1, l.mkString(" "), "en", "plant", l.mkString(" ").length.toLong))
       id += 2
     }
-    val d = java.nio.file.Files.createTempDirectory("graft-d22-gap").toString
+    val d = tempDir("graft-d22-gap").toString
     docs.toSeq.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     d

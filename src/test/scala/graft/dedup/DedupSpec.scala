@@ -495,7 +495,8 @@ class DedupSpec extends SparkSpec {
       explode(Text.bandKeys(col("mh"),
         DedupQueries.Bands, DedupQueries.Rows)).as("bk0"))
       .select(col("doc_id"), unhex(col("bk0")).as("bk"))
-    val out = DedupQueries.containmentPairs(banded, f.select("doc_id", "sh"))
+    val out = DedupQueries.containmentPairs(banded,
+      DedupQueries.fingerprinted(f.select("doc_id", "sh")))
       .collect()
     assert(out.length === 1, "planted subset pair must be flagged")
     val r = out.head

@@ -49,8 +49,7 @@ class DeltaAdmissionSpec extends SparkSpec {
     val df = base.zipWithIndex
       .map { case (v, i) => (i.toLong, v.map(_.toFloat).toSeq) }
       .toSeq.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-d27").toString
+    val dir = tempDir("graft-d27").toString
     df.coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
 

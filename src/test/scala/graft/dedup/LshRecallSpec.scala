@@ -58,8 +58,7 @@ class LshRecallSpec extends SparkSpec {
     // a `doc_id < 500` audit would see zero docs and report the
     // vacuous n_truth = 0; the min-anchored slice must reproduce the
     // unshifted report's truth count exactly
-    val shifted = java.nio.file.Files
-      .createTempDirectory("graft-d21-shift").toString
+    val shifted = tempDir("graft-d21-shift").toString
     graft.sources.Tables.table(spark, sf, "documents")
       .withColumn("doc_id", col("doc_id") + 1000000L)
       .write.mode("overwrite").parquet(s"$shifted/documents.parquet")

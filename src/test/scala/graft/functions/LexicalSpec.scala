@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Hand-computed expectations for the lexical (WordNet-family) metrics
   * over a 6-node toy taxonomy, so the JCN/LIN/WUP arithmetic is checked
   * against the standard definitions — independently of the builtin
@@ -15,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *                          leafa(3) leafb(2)
   * subtree: leafa=3, leafb=2, mid=11, other=4, root=25 (total).
   */
-class LexicalSpec extends AnyFunSuite {
+class LexicalSpec extends graft.SparkSpec {
 
   private val toy = Lexical.Taxonomy.parse(
     """root||10
@@ -169,7 +167,7 @@ class LexicalSpec extends AnyFunSuite {
       sb.append(words.map(w => s"$w 0").mkString(" "))
       sb.append(s" ${ptrs.size} ${ptrs.mkString(" ")} | generated synset $p\n")
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-wndb")
+    val dir = tempDir("graft-wndb")
     java.nio.file.Files.writeString(dir.resolve("data.noun"), sb.toString)
     val t = Lexical.Taxonomy.fromWndbDir(dir.toString)
 

@@ -77,7 +77,7 @@ class FeaturesConfigSpec extends SparkSpec {
   }
 
   test("octopus persists the config with the model and reload restores it") {
-    val work = java.nio.file.Files.createTempDirectory("graft-featcfg").toString
+    val work = tempDir("graft-featcfg").toString
     val cfg = FeaturesConfig.fromJson(reducedJson)
     val oct = new Octopus(Ontology.tpch,
       Seq(ModelerQueries.knownOrderModel), work, cfg)

@@ -28,7 +28,7 @@ class ApproxFdSpec extends SparkSpec {
       (3L, "2024-01-10", 110L, "P0", "O", 19.0))
       .toDF("o_custkey", "o_orderdate", "o_orderkey",
         "o_orderpriority", "o_orderstatus", "o_totalprice")
-    val d = java.nio.file.Files.createTempDirectory("graft-p16").toString
+    val d = tempDir("graft-p16").toString
     rows.coalesce(1).write.mode("overwrite").parquet(s"$d/orders.parquet")
     d
   }

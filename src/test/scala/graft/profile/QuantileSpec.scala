@@ -80,7 +80,7 @@ class QuantileSpec extends SparkSpec {
       (2.0, 20.0, 4.0, 0.07), (5.0, 50.0, 2.0, 0.07),
       (4.0, 40.0, 3.0, 0.07))
       .toDF("l_discount", "l_extendedprice", "l_quantity", "l_tax")
-    val dir = java.nio.file.Files.createTempDirectory("graft-p11").toString
+    val dir = tempDir("graft-p11").toString
     rows.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = graft.SparkEntry.queries("p11_quantile_profile")(spark, dir)
       .collect()

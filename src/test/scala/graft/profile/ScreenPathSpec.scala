@@ -47,7 +47,7 @@ class ScreenPathSpec extends SparkSpec {
         .as("o_orderstatus"),
       when(col("id") % 100 === 0, col("id")).otherwise(lit(0L))
         .cast("double").as("o_totalprice"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-p12").toString
+    val dir = tempDir("graft-p12").toString
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
     dir
   }

@@ -36,7 +36,7 @@ class SkylineSpec extends SparkSpec {
       (4L, 13L, "O", 500.0, ts("2024-01-01 00:00:00"), "1-URGENT"))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
-    val dir = java.nio.file.Files.createTempDirectory("graft-q32").toString
+    val dir = tempDir("graft-q32").toString
     orders.write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val got = graft.SparkEntry.queries("q32_skyline")(spark, dir)
       .collect().map(_.getAs[Long]("o_orderkey")).toSet
@@ -51,7 +51,7 @@ class SkylineSpec extends SparkSpec {
       java.sql.Timestamp, String)]
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
-    val dir = java.nio.file.Files.createTempDirectory("graft-q32e").toString
+    val dir = tempDir("graft-q32e").toString
     empty.write.mode("overwrite").parquet(s"$dir/orders.parquet")
     assert(graft.SparkEntry.queries("q32_skyline")(spark, dir)
       .collect().isEmpty)

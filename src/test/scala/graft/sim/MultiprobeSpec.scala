@@ -54,7 +54,7 @@ class MultiprobeSpec extends SparkSpec {
     val v = (0 until 64).map(d => 1.0f + 0.013f * d).toArray
     val df = Seq((0L, "a", v), (1L, "b", v.map(-_)))
       .toDF("vec_id", "label", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft-s15").toString
+    val dir = tempDir("graft-s15").toString
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     // precondition: complementary signatures (would break only if some
     // plane dot were exactly 0, when >= 0 sets the bit for BOTH signs)

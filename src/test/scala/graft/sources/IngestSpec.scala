@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 class IngestSpec extends SparkSpec {
 
   private lazy val tmp = {
-    val d = Files.createTempDirectory("graft-ingest").toString
+    val d = tempDir("graft-ingest").toString
     // CSV with header, an all-empty row, quoted comma
     Files.writeString(Paths.get(s"$d/people.csv"),
       "name,age,city\nAlice,34,\"Sydney, AU\"\n,,\nBob,28,Perth\n")
@@ -50,7 +50,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("file-per-column corpus parses attr@table@db filenames") {
-    val d = Files.createTempDirectory("graft-northix").toString
+    val d = tempDir("graft-northix").toString
     Files.writeString(Paths.get(s"$d/name@person@db1"), "alice\nbob\n")
     Files.writeString(Paths.get(s"$d/age@person@db1"), "30\n40\n")
     Files.writeString(Paths.get(s"$d/title@book@db2"), "dune\n")
@@ -68,7 +68,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("directory labels: subdirectory = class, files = members") {
-    val d = Files.createTempDirectory("graft-dirlabels")
+    val d = tempDir("graft-dirlabels")
     Files.createDirectories(d.resolve("person"))
     Files.createDirectories(d.resolve("place"))
     Files.writeString(d.resolve("person/name@p@db"), "")

@@ -40,7 +40,7 @@ class BpeSpec extends SparkSpec {
   test("t20 query emits the fixture merge list through the full path " +
       "(word count -> capped dict -> induction)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-t20").toString
+    val dir = tempDir("graft-t20").toString
     // source column present like the real catalog (the induction scan
     // reads the shared per-(source, word) checkpoint since r16)
     Seq((1L, "aaab aaab", "x"), (2L, "ab", "x"),
@@ -83,7 +83,7 @@ class BpeSpec extends SparkSpec {
   test("t21 query: per-source fertility on a hand-computed fixture " +
       "(global vocab, per-source application)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-t21").toString
+    val dir = tempDir("graft-t21").toString
     // global dict: aaab(x2), ab(x1) -> merges (a,a),(a,b),(aa,ab);
     // tokenize: aaab -> [aaab] (1 token), ab -> [ab] (1 token)
     Seq((1L, "aaab aaab", "x"), (2L, "ab", "y"),

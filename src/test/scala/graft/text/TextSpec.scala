@@ -133,7 +133,7 @@ class TextSpec extends SparkSpec {
       (sd, "zeta eta theta", "en", "s0", 14L),
       (sd + 1L, "iota kappa", "en", "s0", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-t8").toString
+    val dir = tempDir("graft-t8").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = graft.SparkEntry.queries("t8_sequence_pack")(spark, dir)
       .collect().map(r => r.getAs[Long]("doc_id") ->
@@ -165,7 +165,7 @@ class TextSpec extends SparkSpec {
       (1L, "c d", "de", "s0", 3L),
       (2L, "z", "en", "s0", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-t12").toString
+    val dir = tempDir("graft-t12").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = graft.SparkEntry.queries("t12_lm_perplexity")(spark, dir)
       .collect().map(r => r.getAs[Long]("doc_id") ->
@@ -189,7 +189,7 @@ class TextSpec extends SparkSpec {
       (0L, "c d e", "de", "s0", 5L),
       (1L, "f", "fr", "s0", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-t12e").toString
+    val dir = tempDir("graft-t12e").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = graft.SparkEntry.queries("t12_lm_perplexity")(spark, dir)
       .collect().map(r => r.getAs[Long]("doc_id") ->
@@ -207,7 +207,7 @@ class TextSpec extends SparkSpec {
       (3L, tpl, "en", "s1", 1L),                // s1 has 1 doc: NOT boiler
       (4L, "tiny doc", "en", "s0", 1L))         // <5 words: no grams
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-t13").toString
+    val dir = tempDir("graft-t13").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = graft.SparkEntry.queries("t13_boilerplate")(spark, dir)
       .collect().map(r => r.getAs[Long]("doc_id") ->
