@@ -201,7 +201,9 @@ object Bench {
     // record and a driver/scratch run were indistinguishable on disk):
     // the binary's git sha (resolved from the CWD's repo — null when
     // run from a scratch dir, which itself distinguishes the two), the
-    // query count (full portfolio vs restricted), and the wall time.
+    // query count (full portfolio vs restricted), the wall time, and
+    // the machine the totals were taken on: cores, shuffle partitions,
+    // driver heap (local mode: this JVM's max heap) and Spark version.
     val gitSha: String =
       try {
         val p = new ProcessBuilder("git", "rev-parse", "HEAD")
@@ -212,7 +214,11 @@ object Bench {
       } catch { case _: Exception => "null" }
     val provenance =
       s""""git_sha":$gitSha,"n_queries":${results.size},""" +
-      s""""generated_at":"${java.time.Instant.now()}""""
+      s""""generated_at":"${java.time.Instant.now()}",""" +
+      s""""cpus":${spark.sparkContext.defaultParallelism},""" +
+      s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+      s""""driver_memory":"${Runtime.getRuntime.maxMemory >> 20}m",""" +
+      s""""spark_version":"${spark.version}""""
     // Per-key one-time materialization seconds (r15 verdict #3:
     // median-of-Runs discards the first iteration that pays a
     // checkpoint build, and the per-query `cold` map charges a build

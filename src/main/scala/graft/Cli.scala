@@ -126,9 +126,13 @@ object Cli {
         case _ =>
           System.err.println("unknown command; see Cli scaladoc")
           return 2
-      } catch { case e: GraftService.ClientError =>
-        System.err.println(e.getMessage)
-        return 2
+      } catch {
+        case e: GraftService.ClientError =>
+          System.err.println(e.getMessage)
+          return 2
+        case _: NumberFormatException =>
+          System.err.println("ids must be integers")
+          return 2
       }
       0
     case _ =>

@@ -165,14 +165,6 @@ final class GraftHttpServer(svc: GraftService, spark: () => SparkSession) {
       case ("POST", "dataset" :: Nil) =>
         val b = body(ex)
         (b.get("name"), b.get("dir")) match {
-          // validate client-supplied fields HERE: an empty dir reaches
-          // Hadoop's `new Path("")` IllegalArgumentException deep in
-          // Spark, which the narrow Malformed→400 mapping would surface
-          // as a 500 — but it is the client's error, so reject it at
-          // the door
-          case (Some(name), Some(dir))
-              if name.trim.isEmpty || dir.trim.isEmpty =>
-            err(ex, 400, "name and dir must be non-empty")
           case (Some(name), Some(dir)) =>
             val tables = graft.core.Specs.tables(b.getOrElse("tables", ""))
             respond(ex, 200, datasetJson(svc.createDataset(name, dir, tables)))

@@ -147,6 +147,10 @@ class GraftService(val rootDir: String,
   // ---- dataset CRUD (reference api/DatasetAPI + DatasetStorage) -------
   def createDataset(name: String, dir: String,
       tables: Seq[(String, Seq[String])]): DatasetRef = {
+    // an empty dir would reach Hadoop's `new Path("")` deep in Spark at
+    // train time; it is the caller's error, so reject it before storing
+    if (name.trim.isEmpty || dir.trim.isEmpty)
+      throw new GraftService.ClientError("name and dir must be non-empty")
     val id = nextId("datasets")
     val ref = DatasetRef(id, name, dir, tables, System.currentTimeMillis())
     writeMeta(dsDir(id), "name" -> name, "dir" -> dir,

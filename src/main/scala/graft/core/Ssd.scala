@@ -1,30 +1,17 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Semantic source description attributes (reference
-  * types/SsdTypes.scala:318-356): each SSD attribute carries SQL text
-  * (`"select col from table"`) that the reference declares but never
-  * executes. On Spark it runs for free: register the source tables as
-  * views and hand the text to `spark.sql`, so SSD attribute
-  * transformations (projections, concatenations, case mapping) are real
-  * executable column derivations. */
+  * types/SsdTypes.scala:318-356): each SSD attribute carries the SQL text
+  * (`"select col from table"`) that derives it. The store persists the
+  * text and the server reads the source table back out of it; nothing
+  * executes it, as in the reference. */
 final case class SsdAttribute(id: Int, name: String, sql: String)
 
 final case class Ssd(
     id: Int,
     name: String,
     attributes: Seq[SsdAttribute],
-    ontologyIds: Seq[Int] = Nil) {
-
-  /** Materialize one attribute (a one-column frame) via its SQL. */
-  def attributeFrame(spark: SparkSession, attr: SsdAttribute): DataFrame =
-    spark.sql(attr.sql)
-
-  /** Materialize every attribute; attribute SQL must yield one column. */
-  def materialize(spark: SparkSession): Map[String, DataFrame] =
-    attributes.map(a => a.name -> attributeFrame(spark, a)).toMap
-}
+    ontologyIds: Seq[Int] = Nil)
 
 object Ssd {
   /** Identity SSD for a table's columns (reference

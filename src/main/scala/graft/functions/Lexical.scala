@@ -1,12 +1,11 @@
 package graft.functions
 
-import scala.util.Random
-
 /** Lexical (WordNet-family) similarity: JCN / LIN / WUP word metrics
   * over a pluggable IS-A taxonomy, plus the reference's compound-word
-  * alignment and min-distance-from-class-examples semantics
-  * (reference: matcher nlptools/distance/WS4JWordNetDistanceMetric.scala:6-37,
-  * matcher/features/MinWordNetDistFromClassExamplesFeatureExtractor.scala:35-266).
+  * alignment (reference: matcher
+  * nlptools/distance/WS4JWordNetDistanceMetric.scala:6-37). The min
+  * distance from each class's examples is
+  * [[graft.matcher.ExampleFeatures.lexicalMinDistPerClass]].
   *
   * The reference computes these through WS4J over the WordNet database
   * it ships in test resources; that data isn't shippable here, so the
@@ -145,29 +144,6 @@ object Lexical {
       }
       (avgOf(_._1), avgOf(_._2), avgOf(_._3))
     }
-
-    /** Reference J4/A25: min compound distance from each class's example
-      * headers; -1 for empty pools/token sets; pools larger than
-      * maxComparisons are subset by the reference's seeded shuffle
-      * (MinWordNetDistFromClassExamplesFeatureExtractor.scala:57-61). */
-    def minDistFromClassExamples(
-        attrTokens: Seq[String],
-        classList: Seq[String],
-        pool: Map[String, Seq[Seq[String]]],
-        maxComparisons: Int = 20): Map[String, (Double, Double, Double)] =
-      classList.map { cls =>
-        val examples = pool.getOrElse(cls, Nil)
-        val subset = if (examples.size > maxComparisons)
-          new Random(10857171).shuffle(examples).take(maxComparisons)
-        else examples
-        val dists =
-          if (subset.isEmpty || attrTokens.isEmpty) Seq((-1.0, -1.0, -1.0))
-          else subset.map { ex =>
-            if (ex.isEmpty) (-1.0, -1.0, -1.0)
-            else compoundDistance(attrTokens, ex)
-          }
-        cls -> (dists.map(_._1).min, dists.map(_._2).min, dists.map(_._3).min)
-      }.toMap
   }
 
   object Taxonomy {

@@ -20,9 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * never enter whole-stage codegen, and each hop pays NamedLambdaVariable
   * binding + tree-walk overhead. Batch d2 sidesteps that with explode +
   * 64 codegen'd min-aggregates (DedupQueries.signatures), but that shape
-  * is a stateful aggregation — unusable on the STREAM side of st7/
-  * StreamingDedup, where the signature must be a stateless row-local
-  * projection. This expression computes the identical arithmetic in
+  * is a stateful aggregation — unusable on the STREAM side of st7,
+  * where the signature must be a stateless row-local projection. This expression computes the identical arithmetic in
   * compiled form: |shingles| md5 digests + k × |shingles| long
   * multiply-mods per row, no per-element interpretation. Measured at
   * sf1 it takes st7 from 531 s (nested HOFs) to stream-rate.
@@ -68,7 +67,7 @@ object MinHashSignature {
 
 /** Native LSH band keys over an `array<long>` MinHash signature —
   * md5(band_index "|" sig values) per band, the banding step of
-  * d2/d12/d14/st7/StreamingDedup.
+  * d2/d12/d14/st7.
   *
   * Why native: the HOF formulation
   * (`transform(sequence(0, bands-1), b -> md5(concat_ws("|", b,

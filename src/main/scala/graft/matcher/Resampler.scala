@@ -106,14 +106,13 @@ object Resampler {
   val DefaultNumBags = 50
   val DefaultBagSize = 100
 
-  /** Core bag sampler: for each column, emit `bagCount` bags of exactly
+  /** Core bag sampler: for each column, emit `numBags` bags of exactly
     * `bagSize` values each, sampled deterministically (hash order over
     * (value, copy, bag) replaces the reference's per-bag seeded shuffle,
     * ClassImbalanceResampler.scala:186-205). Columns shorter than
     * `bagSize` are first filled by replicating their values — the
     * reference's sampling-with-replacement fill (:271-300, 342-351).
-    * `bagCountFor` maps a column to its bag count so the training path
-    * can vary bags per attribute. Input must be a bounded melt (S9).
+    * Input must be a bounded melt (S9).
     *
     * Shape (r16): ONE shuffle of the melt rows keyed by column, bags
     * generated group-locally. The previous form exploded copies × bags
@@ -129,7 +128,7 @@ object Resampler {
     * XxHash64Function), the same (hash, value-binary) order with the
     * same bottom-`bagSize` cut (BagParitySpec pins old-vs-new equality;
     * the m4/m6/m7/m8 prediction pins guard it end-to-end). */
-  private def bagExplode(melted: DataFrame, bagCountFor: String => Long,
+  private def bagExplode(melted: DataFrame, numBags: Int,
       bagSize: Int, seed: Long): DataFrame = {
     val spark = melted.sparkSession
     import spark.implicits._
@@ -139,71 +138,67 @@ object Resampler {
     melted.select(col("col_name"), col("value")).as[(String, String)]
       .groupByKey(_._1)
       .flatMapGroups { (cn: String, it: Iterator[(String, String)]) =>
-        val bags = bagCountFor(cn)
-        if (bags <= 0L) Iterator.empty
-        else {
-          val vals = it.map(_._2).toArray
-          val n = vals.length
-          val copies =
-            if (n >= bagSize) 1L
-            else math.ceil(bagSize.toDouble / n).toLong
-          // candidates = melt rows × copies, exactly the old explode;
-          // precompute the hash chain prefix h(42 → value → copy) once
-          // per candidate (null value skipped, the xxhash64 contract)
-          val nc = n * copies.toInt
-          val cand = new Array[UTF8String](nc)
-          val pre = new Array[Long](nc)
-          var j = 0
-          var i = 0
-          while (i < n) {
-            val v = vals(i)
-            val u = if (v == null) null else UTF8String.fromString(v)
-            val hv =
-              if (v == null) 42L
-              else XxHash64Function.hash(u, StringType, 42L)
-            var c = 1L
-            while (c <= copies) {
-              cand(j) = u
-              pre(j) = XxHash64Function.hash(c, LongType, hv)
-              c += 1L; j += 1
-            }
-            i += 1
+        val vals = it.map(_._2).toArray
+        val n = vals.length
+        val copies =
+          if (n >= bagSize) 1L
+          else math.ceil(bagSize.toDouble / n).toLong
+        // candidates = melt rows × copies, exactly the old explode;
+        // precompute the hash chain prefix h(42 → value → copy) once
+        // per candidate (null value skipped, the xxhash64 contract)
+        val nc = n * copies.toInt
+        val cand = new Array[UTF8String](nc)
+        val pre = new Array[Long](nc)
+        var j = 0
+        var i = 0
+        while (i < n) {
+          val v = vals(i)
+          val u = if (v == null) null else UTF8String.fromString(v)
+          val hv =
+            if (v == null) 42L
+            else XxHash64Function.hash(u, StringType, 42L)
+          var c = 1L
+          while (c <= copies) {
+            cand(j) = u
+            pre(j) = XxHash64Function.hash(c, LongType, hv)
+            c += 1L; j += 1
           }
-          val idx = new Array[Integer](nc)
-          val take = math.min(bagSize, nc)
-          (0L until bags).iterator.flatMap { b =>
-            val hs = new Array[Long](nc)
-            var k = 0
-            while (k < nc) {
-              hs(k) = XxHash64Function.hash(seed, LongType,
-                XxHash64Function.hash(b, LongType, pre(k)))
-              idx(k) = k
-              k += 1
-            }
-            // (hash asc, value binary asc nulls-first) — the window's
-            // orderBy(xxhash64(...), value)
-            java.util.Arrays.sort(idx, (x: Integer, y: Integer) => {
-              val hc = java.lang.Long.compare(hs(x), hs(y))
-              if (hc != 0) hc
-              else {
-                val a = cand(x); val bb = cand(y)
-                if (a == null && bb == null) 0
-                else if (a == null) -1
-                else if (bb == null) 1
-                else a.compareTo(bb)
-              }
-            })
-            // strict emission: idx/hs are reused across bags, so the
-            // rows must be materialized before the next bag re-sorts
-            val out = new Array[(String, Long, String)](take)
-            var r = 0
-            while (r < take) {
-              val u = cand(idx(r))
-              out(r) = (cn, b, if (u == null) null else u.toString)
-              r += 1
-            }
-            out.iterator
+          i += 1
+        }
+        val idx = new Array[Integer](nc)
+        val take = math.min(bagSize, nc)
+        (0L until numBags.toLong).iterator.flatMap { b =>
+          val hs = new Array[Long](nc)
+          var k = 0
+          while (k < nc) {
+            hs(k) = XxHash64Function.hash(seed, LongType,
+              XxHash64Function.hash(b, LongType, pre(k)))
+            idx(k) = k
+            k += 1
           }
+          // (hash asc, value binary asc nulls-first) — the window's
+          // orderBy(xxhash64(...), value)
+          java.util.Arrays.sort(idx, (x: Integer, y: Integer) => {
+            val hc = java.lang.Long.compare(hs(x), hs(y))
+            if (hc != 0) hc
+            else {
+              val a = cand(x); val bb = cand(y)
+              if (a == null && bb == null) 0
+              else if (a == null) -1
+              else if (bb == null) 1
+              else a.compareTo(bb)
+            }
+          })
+          // strict emission: idx/hs are reused across bags, so the
+          // rows must be materialized before the next bag re-sorts
+          val out = new Array[(String, Long, String)](take)
+          var r = 0
+          while (r < take) {
+            val u = cand(idx(r))
+            out(r) = (cn, b, if (u == null) null else u.toString)
+            r += 1
+          }
+          out.iterator
         }
       }
       .toDF("col_name", "bag_id", "value")
@@ -214,59 +209,5 @@ object Resampler {
     * values per column. Returns (col_name, bag_id, value). */
   def assignBags(melted: DataFrame, numBags: Int = DefaultNumBags,
       bagSize: Int = DefaultBagSize, seed: Long = 501L): DataFrame =
-    bagExplode(melted, _ => numBags.toLong, bagSize, seed)
-
-  /** Per-class rebalanced bag counts for the training path (reference
-    * bagging + numBagsSequence, ClassImbalanceResampler.scala:216-268,
-    * 333-379): every class's attributes together contribute exactly
-    * `sampleSize` bags — max (BaggingToMax) or mean (BaggingToMean) of
-    * the per-class `numBags * #attrs` counts, or `numBags` per attribute
-    * unrebalanced (Bagging). Classes with more attributes than bags get
-    * a deterministic name-ordered pick of `sampleSize` attributes with
-    * one bag each (hash order replaces the reference's seeded shuffle).
-    * Pure driver-side arithmetic over O(#columns) labels. */
-  def trainingBagCounts(labels: Seq[(String, String)],
-      strategy: String = "BaggingToMax",
-      numBags: Int = DefaultNumBags): Seq[(String, Int)] = {
-    val byClass = labels.groupBy(_._2).view
-      .mapValues(_.map(_._1).sorted).toMap
-    val classCounts = byClass.map { case (c, as) => c -> numBags * as.size }
-    val sampleSize = strategy match {
-      case "Bagging" => -1
-      case "BaggingToMean" =>
-        (classCounts.values.sum.toDouble / classCounts.size).toInt
-      case _ => classCounts.values.max
-    }
-    byClass.toSeq.sortBy(_._1).flatMap { case (_, attrs) =>
-      if (sampleSize < 0) attrs.map(_ -> numBags)
-      else if (sampleSize < attrs.size)
-        // more attributes than requested bags: 1 bag for the first
-        // sampleSize attributes in name order, 0 for the rest
-        attrs.zipWithIndex.map { case (a, i) =>
-          a -> (if (i < sampleSize) 1 else 0) }
-      else {
-        // numBagsSequence: split sampleSize into near-equal integer
-        // shares across the class's attributes
-        var generated = 0
-        attrs.zipWithIndex.map { case (a, i) =>
-          val cur = (sampleSize - generated) / (attrs.size - i)
-          generated += cur
-          a -> cur
-        }
-      }
-    }
-  }
-
-  /** Training-path bagging: melt -> (col_name, bag_id, value) with the
-    * per-class rebalanced bag counts of [[trainingBagCounts]]. */
-  def trainingBags(melted: DataFrame, labels: Seq[(String, String)],
-      strategy: String = "BaggingToMax",
-      numBags: Int = DefaultNumBags,
-      bagSize: Int = DefaultBagSize, seed: Long = 501L): DataFrame = {
-    val counts = trainingBagCounts(labels, strategy, numBags)
-      .filter(_._2 > 0).toMap
-    val inCounts = typedLit(counts.keys.toSeq)
-    bagExplode(melted.filter(array_contains(inCounts, col("col_name"))),
-      c => counts.getOrElse(c, 0).toLong, bagSize, seed)
-  }
+    bagExplode(melted, numBags, bagSize, seed)
 }

@@ -27,12 +27,6 @@ final case class Ontology(
     val cs = classClosure(c).toSet
     dataProps.filter(p => cs.contains(p.domain))
   }
-
-  /** Object properties whose domain includes the class. */
-  def objectPropsOf(c: String): Seq[ObjectProp] = {
-    val cs = classClosure(c).toSet
-    objectProps.filter(p => cs.contains(p.domain))
-  }
 }
 
 object Ontology {

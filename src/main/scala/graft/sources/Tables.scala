@@ -80,22 +80,4 @@ object Tables {
   /** All tables as a name->DataFrame map. */
   def all(spark: SparkSession, dir: String): Map[String, DataFrame] =
     names.map(n => n -> table(spark, dir, n)).toMap
-
-  /** Register every table as a temp view so `spark.sql` works against it. */
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
-
-  /** Long-format column view: melt selected columns of `df` into
-    * (col_name, value-as-string) rows. This is the Spark-native
-    * replacement for the reference's column-oriented `Attribute.values`
-    * (reference: matcher DataModel.scala:89-111) — one distributed table
-    * instead of driver-held per-column lists, so profiling any number of
-    * columns is a single shuffle regardless of data size.
-    */
-  def melt(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val parts = cols
-      .map(c => s"'$c', cast(`$c` as string)")
-      .mkString(", ")
-    df.selectExpr(s"stack(${cols.size}, $parts) as (col_name, value)")
-  }
 }

@@ -28,9 +28,9 @@ import graft.sources.Tables
   *    the final watermark (max event time - delay) has passed — the
   *    same answer any executor count or batch split produces.
   *  - st3: streaming dropDuplicates keys state by the 128-bit content
-  *    fingerprint only (no document bodies in the state store). For
-  *    time-bounded retention at production scale the engine pairs this
-  *    with `dropDuplicatesWithinWatermark` (see [[StreamingDedup]]).
+  *    fingerprint only (no document bodies in the state store). The
+  *    state grows with the number of distinct documents: st3 sets no
+  *    watermark, so no key is ever evicted.
   *  - st4: stateless projection — no state store at all; a stream and
   *    its batch backfill are identical by construction.
   */

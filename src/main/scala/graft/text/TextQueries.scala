@@ -1496,12 +1496,12 @@ object TextQueries {
     //      Scale shape: the corpus-sized work is ONE (source, word)
     //      count scan (map-side combined); tokenization applies to the
     //      per-source DISTINCT-word frame (vocabulary-sized), each
-    //      word encoded once and weighted by its count — the same
-    //      posture as [[bpeFertilityMicro]] and production tokenizer
-    //      eval (never a per-document re-encode). Output rows =
-    //      #sources. Induction itself is shared with t20 via
-    //      [[inducedMerges]] (memoized per dir, so the pipeline pays
-    //      the word-count scan + 50-round loop once per corpus).
+    //      word encoded once and weighted by its count — the
+    //      posture of production tokenizer eval (never a per-document
+    //      re-encode). Output rows = #sources. Induction itself is
+    //      shared with t20 via [[inducedMerges]] (memoized per dir, so
+    //      the pipeline pays the word-count scan + 50-round loop once
+    //      per corpus).
     //
     //      Oracle: same documented class as t20 — the merge list is an
     //      iterative global argmax, so the twin is an sf0.01 VALUES
@@ -1569,10 +1569,9 @@ object TextQueries {
 
   /** t20/t21's shared induction: the distributed word-count scan +
     * the driver-side merge loop, memoized per data dir so the two
-    * queries (and [[bpeFertilityMicro]] callers) pay it once per
-    * corpus per JVM — the Materialize posture for a driver-sized
-    * artifact (a <=50-row merge list does not need a parquet
-    * round-trip). */
+    * queries pay it once per corpus per JVM — the Materialize posture
+    * for a driver-sized artifact (a <=50-row merge list does not need a
+    * parquet round-trip). */
   private val mergeCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Bpe.Merge]]()
   /** Cache key = dir + a cheap content fingerprint (sum of file sizes
@@ -1612,28 +1611,4 @@ object TextQueries {
       .groupBy(col("w")).agg(sum(col("n")).as("freq"))
       .orderBy(col("freq").desc, col("w"))
       .limit(BpeShapeWords)
-
-  /** The t18 fertility re-measure hook: tokens-per-word when the corpus
-    * is tokenized with t20's INDUCED vocab instead of t18's regex
-    * proxy. Distributed over the vocabulary-sized word-frequency frame
-    * (a typed map applying the broadcast merge ranks — not a per-doc
-    * UDF over the corpus): each distinct word is tokenized once and
-    * weighted by its count. Returns one row:
-    * (n_words, n_tokens, fertility_micro). */
-  def bpeFertilityMicro(s: org.apache.spark.sql.SparkSession, dir: String,
-      merges: Seq[Bpe.Merge]): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val ranks = merges.map(m => (m.left, m.right) -> m.rank).toMap
-    val bc = s.sparkContext.broadcast(ranks)
-    wordCounts(s, dir)
-      .groupBy(col("w")).agg(sum(col("n")).as("freq"))
-      .as[(String, Long)]
-      .map { case (w, f) => (f, Bpe.tokenize(w, bc.value).length * f) }
-      .toDF("w_count", "t_count")
-      .agg(sum(col("w_count")).as("n_words"),
-        sum(col("t_count")).as("n_tokens"))
-      .withColumn("fertility_micro", expr(
-        """CAST(CAST(n_tokens AS DECIMAL(38,0)) * 1000000
-          div nullif(n_words, 0L) AS LONG)"""))
-  }
 }

@@ -38,4 +38,24 @@ class CliSpec extends SparkSpec {
     assert(run(root, "dataset", "list").isEmpty)
     assert(run(root, "ssd", "list").isEmpty)
   }
+
+  test("an empty dataset name or dir and a non-numeric id are usage " +
+      "errors (exit 2), not a stored dataset or a crash") {
+    val root = tempDir("graft-cli-args").toString
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val codes =
+      try Seq(
+        Cli.run(List(root, "dataset", "add", "", "", "nation:n_name")),
+        Cli.run(List(root, "dataset", "add", "d1", " ", "nation:n_name")),
+        Cli.run(List(root, "dataset", "get", "abc")),
+        Cli.run(List(root, "dataset", "delete", "1x")))
+      finally System.setErr(stderr)
+    assert(codes === Seq(2, 2, 2, 2))
+    assert(err.toString("UTF-8").linesIterator.toSeq === Seq(
+      "name and dir must be non-empty", "name and dir must be non-empty",
+      "ids must be integers", "ids must be integers"))
+    assert(run(root, "dataset", "list").isEmpty)
+  }
 }

@@ -1,0 +1,120 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards the source tree against code that no production path reaches:
+  * every top-level `object`, `class` or `trait` in src/main must be named
+  * somewhere in src/main besides its own declaration (comments do not
+  * count). Objects that define `main` are entry points and exempt. There
+  * is no allowlist: a definition only its spec calls belongs in test
+  * scope or nowhere. */
+class ReachabilitySpec extends AnyFunSuite {
+  import ReachabilitySpec._
+
+  test("stripComments drops line and nested block comments, keeps strings") {
+    val q3 = "\"\"\""
+    val src = Seq(
+      "val a = \"x // y\" // gone",
+      "/* gone /* nested */\n still gone */ val b = 'c'",
+      "val c = '\"' // gone",
+      "val d = s\"${f(\"/*\")}\" + " + q3 + "// kept" + q3).mkString("\n")
+    assert(stripComments(src) === Seq(
+      "val a = \"x // y\" ",
+      "\n val b = 'c'",
+      "val c = '\"' ",
+      "val d = s\"${f(\"/*\")}\" + " + q3 + "// kept" + q3).mkString("\n"))
+  }
+
+  test("every top-level definition in src/main is named by src/main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val texts = {
+      val s = Files.walk(Paths.get("src/main"))
+      try s.iterator().asScala.map(_.toString).filter(_.endsWith(".scala"))
+        .map(f => stripComments(Files.readString(Paths.get(f)))).toSeq
+      finally s.close()
+    }
+    assert(texts.size > 50, s"src/main scan found only ${texts.size} files")
+    // (name, whether the declaration's top-level segment defines main)
+    val decls = texts.flatMap { t =>
+      val ms = TopLevelDecl.findAllMatchIn(t).toSeq
+      ms.zipWithIndex.map { case (m, i) =>
+        val end = if (i + 1 < ms.size) ms(i + 1).start else t.length
+        (m.group(2), m.group(1) == "object" &&
+          t.substring(m.start, end).contains("def main("))
+      }
+    }
+    val declCount = decls.groupBy(_._1).view.mapValues(_.size).toMap
+    val unnamed = decls.collect { case (name, false) => name }.distinct
+      .filter { name =>
+        val word = ("\\b" + name + "\\b").r
+        texts.map(word.findAllIn(_).size).sum <= declCount(name)
+      }.sorted
+    assert(unnamed.isEmpty,
+      s"named nowhere in src/main but their own declarations: $unnamed")
+  }
+}
+
+object ReachabilitySpec {
+
+  /** A top-level (column-0) declaration: group 1 = keyword, 2 = name. */
+  private val TopLevelDecl =
+    ("(?m)^(?:(?:final|sealed|abstract|case|implicit|private|protected)" +
+      "(?:\\[\\w+\\])?\\s+)*(object|class|trait)\\s+([A-Za-z_]\\w*)").r
+
+  private val CharLiteral = """'(?:\\u[0-9a-fA-F]{4}|\\.|[^\\'\n])'""".r
+
+  /** Scala source with `//` and (nested) `/* */` comments removed; string
+    * and character literals are kept verbatim, and a block comment keeps
+    * its newlines so line anchors still hold. */
+  def stripComments(src: String): String = {
+    val out = new StringBuilder
+    val n = src.length
+    var i = 0
+    def copyTo(end: Int): Unit = { out ++= src.substring(i, end); i = end }
+    // end (exclusive) of the one-line string literal opening at `from`;
+    // an interpolated one may hold `${...}` blocks with quoted strings
+    def stringEnd(from: Int): Int = {
+      val interpolated = from > 0 && src(from - 1).isLetterOrDigit
+      var j = from + 1
+      while (j < n && src(j) != '"' && src(j) != '\n') {
+        if (src(j) == '\\') j += 2
+        else if (interpolated && src.startsWith("${", j)) {
+          var depth = 1
+          j += 2
+          while (j < n && depth > 0) src(j) match {
+            case '"' => j = stringEnd(j)
+            case '{' => depth += 1; j += 1
+            case '}' => depth -= 1; j += 1
+            case _ => j += 1
+          }
+        } else j += 1
+      }
+      math.min(j + 1, n)
+    }
+    while (i < n) {
+      if (src.startsWith("//", i)) {
+        while (i < n && src(i) != '\n') i += 1
+      } else if (src.startsWith("/*", i)) {
+        var depth = 1
+        i += 2
+        while (i < n && depth > 0) {
+          if (src.startsWith("/*", i)) { depth += 1; i += 2 }
+          else if (src.startsWith("*/", i)) { depth -= 1; i += 2 }
+          else { if (src(i) == '\n') out += '\n'; i += 1 }
+        }
+      } else if (src.startsWith("\"\"\"", i)) {
+        val close = src.indexOf("\"\"\"", i + 3)
+        var end = if (close < 0) n else close + 3
+        while (end < n && src(end) == '"') end += 1
+        copyTo(end)
+      } else if (src(i) == '"') {
+        copyTo(stringEnd(i))
+      } else if (src(i) == '\'') {
+        copyTo(i + CharLiteral.findPrefixMatchOf(src.subSequence(i, n))
+          .fold(1)(_.end))
+      } else copyTo(i + 1)
+    }
+    out.toString
+  }
+}

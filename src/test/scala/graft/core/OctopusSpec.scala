@@ -3,7 +3,6 @@ package graft.core
 import graft.SparkSpec
 import graft.matcher.Labels
 import graft.modeler.{ModelerQueries, Ontology}
-import graft.functions.{Transformation, Transformations}
 
 class OctopusSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
@@ -126,16 +125,5 @@ class OctopusSpec extends SparkSpec {
     assert(lSugs !== nSugs,
       "learned semantic types had no effect on the suggested models")
     assert(predL.suggestions.forall(_.model.isConnected))
-  }
-
-  test("transformations rewrite only the targeted semantic class") {
-    import spark.implicits._
-    val df = Seq(("phone", "(02) 1234"), ("name", "(02) 1234"))
-      .toDF("label", "value")
-    val out = Transformations.apply(df, "value", "label",
-      Seq(Transformation("phone", "[^0-9]", "")))
-      .collect().map(r => (r.getString(0), r.getString(1))).toMap
-    assert(out("phone") === "021234")
-    assert(out("name") === "(02) 1234")
   }
 }

@@ -164,6 +164,13 @@ class ServerSpec extends SparkSpec {
       assert(post(base, "/v1.0/dataset", "{}")._1 === 400)
       assert(post(base, "/v1.0/dataset",
         """{"dir":"/tmp","other":1}""")._1 === 400)
+      // empty name or dir: the service's validation, answered 400
+      val (emptyCode, emptyBody) = post(base, "/v1.0/dataset",
+        """{"name":" ","dir":"/tmp"}""")
+      assert(emptyCode === 400 && emptyBody.contains("must be non-empty"),
+        emptyBody)
+      assert(post(base, "/v1.0/dataset",
+        """{"name":"x","dir":""}""")._1 === 400)
       // valid scalars parse: numbers/bools/null tolerated, \u escapes ok
       val (okCode, okBody) = post(base, "/v1.0/dataset",
         """{"name":"Aok","n":1,"b":true,"x":null,"dir":"/tmp/ok","tables":""}""")

@@ -65,17 +65,6 @@ class LexicalSpec extends graft.SparkSpec {
     assert(j === (ju / 2) / 1e6)
   }
 
-  test("min over class examples + empty-pool sentinel (reference J4/A25)") {
-    val out = toy.minDistFromClassExamples(
-      attrTokens = Seq("leafa"),
-      classList = Seq("c1", "c2"),
-      pool = Map("c1" -> Seq(Seq("other"), Seq("leafb", "leafa"))))
-    // c1: min(d(leafa, other), aligned {leafb,leafa}) — second example
-    // contains leafa so its bigger-set mean includes a 0 match
-    assert(out("c1")._3 < toy.wordDistances("leafa", "other")._3)
-    assert(out("c2") === ((-1.0, -1.0, -1.0)))
-  }
-
   test("parse rejects cycles, undefined parents, and multiple roots") {
     def bad(src: String) =
       intercept[IllegalArgumentException](

@@ -6,8 +6,8 @@ import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
 /** Algebraic laws of the native MinHash/LSH kernels ([[MinHashOps]]) —
-  * the properties every LSH consumer (d2/d12/d14/st7/st8/st10,
-  * StreamingDedup) silently relies on:
+  * the properties every LSH consumer (d2/d12/d14/st7/st8/st10)
+  * silently relies on:
   *
   *  - MERGEABILITY: sig(A ∪ B) = elementwise-min(sig(A), sig(B)).
   *    This is what makes sharded/streaming signature computation

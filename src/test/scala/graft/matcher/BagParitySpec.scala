@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Pins the r16 group-local bag sampler to the explode-then-rank window
-  * formulation it replaced: for any melt, `assignBags`/`trainingBags`
+  * formulation it replaced: for any melt, `assignBags`
   * must emit EXACTLY the rows (as a multiset) of
   *   explode(copies) × explode(bags) →
   *   row_number over (col_name, bag_id) ordered by

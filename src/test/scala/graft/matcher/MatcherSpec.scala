@@ -111,23 +111,6 @@ class MatcherSpec extends SparkSpec {
     assert(counts.length === 3 && counts.forall(_ === 100L))
   }
 
-  test("training bag counts rebalance every class to the same total") {
-    val labels = Seq(
-      "a1" -> "x", "a2" -> "x", "a3" -> "x",   // 3 attrs
-      "b1" -> "y",                             // 1 attr
-      "c1" -> "z", "c2" -> "z")                // 2 attrs
-    val counts = Resampler.trainingBagCounts(labels, "BaggingToMax", numBags = 50)
-    val byClass = counts.groupBy { case (a, _) =>
-      labels.toMap.apply(a) }.view.mapValues(_.map(_._2).sum).toMap
-    // sampleSize = max class count = 50 * 3 = 150; every class hits it
-    assert(byClass === Map("x" -> 150, "y" -> 150, "z" -> 150))
-    // near-equal split inside a class
-    assert(counts.toMap.apply("c1") === 75 && counts.toMap.apply("c2") === 75)
-    // unrebalanced strategy: numBags per attribute
-    val plain = Resampler.trainingBagCounts(labels, "Bagging", numBags = 50)
-    assert(plain.forall(_._2 === 50))
-  }
-
   test("m7 pairwise features carry equality one-hots and distances") {
     val out = EvalQueries.defs("m7_pairwise_features").fn(spark, sf).collect()
     val n = Labels.holdout.size

@@ -1,11 +1,9 @@
 package graft.text
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** t20 BPE vocab induction: hand-computed merges on a fixture corpus,
-  * trainer/tokenizer agreement, and the t18 fertility re-measure hook
-  * (the induced vocab must strictly beat character-level tokenization). */
+  * trainer/tokenizer agreement, and t21's per-source fertility. */
 class BpeSpec extends SparkSpec {
 
   test("induce reproduces the hand-computed merge list on a fixture") {
@@ -54,30 +52,6 @@ class BpeSpec extends SparkSpec {
         r.getAs[Long]("pair_freq")))
     assert(out.toSeq === Seq((1L, "a", "a", "aa", 4L),
       (2L, "a", "b", "ab", 3L), (3L, "aa", "ab", "aaab", 2L)))
-  }
-
-  test("fertility re-measure: the induced vocab strictly beats " +
-      "character-level tokenization on the corpus it was trained on") {
-    val sf = "/root/testdata/sf0.001"
-    val shapes = graft.sources.Tables.table(spark, sf, "documents")
-      .select(explode(Text.words(col("text"))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .orderBy(col("freq").desc, col("w"))
-      .limit(TextQueries.BpeShapeWords)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val merges = Bpe.induce(shapes,
-      TextQueries.BpeMerges, TextQueries.BpeMinPairFreq)
-    assert(merges.nonEmpty)
-    def fert(ms: Seq[Bpe.Merge]): Long =
-      TextQueries.bpeFertilityMicro(spark, sf, ms)
-        .collect().head.getAs[Long]("fertility_micro")
-    val charLevel = fert(Nil) // no merges = one token per character
-    val induced = fert(merges)
-    assert(induced >= 1000000L, "every word is at least one token")
-    assert(induced < charLevel,
-      s"50 merges must compress: $induced !< $charLevel")
-    // each extra merge can only help on the training corpus
-    assert(fert(merges.take(10)) >= induced)
   }
 
   test("t21 query: per-source fertility on a hand-computed fixture " +
