@@ -5,17 +5,17 @@ package graft
   * (see d9's oracle note). `runMain graft.Check <sfDir> [check...]`
   * runs the named checks and prints one `CHECK <name> ...` line each
   * (violations=0 means consistent). DEFAULT is d9_consistency only —
-  * the invariant a scale leg must always run; st_profile, p16_shard_ab
-  * and collect_ratio are opt-in DIAGNOSTICS (timing runs that
-  * materialize queries several times over) and must be named
-  * explicitly. Each diagnostic times the production entry points
-  * themselves; none re-implements a query's stages. */
+  * the invariant a scale leg must always run; st_profile and
+  * collect_ratio are opt-in DIAGNOSTICS (timing runs that materialize
+  * queries several times over) and must be named explicitly. Each
+  * diagnostic times the production entry points themselves; none
+  * re-implements a query's stages. */
 object Check {
   /** Every check this runner knows. AdversarialParitySpec resolves
     * sfExpectedMismatch reasons that cite a replacement check against
     * this set, so a renamed check can't orphan a register reason. */
   val KnownChecks: Set[String] = Set(
-    "d9_consistency", "p16_shard_ab", "collect_ratio", "st_profile")
+    "d9_consistency", "collect_ratio", "st_profile")
   /** The always-run scale-leg invariants; the rest are opt-in timing
     * diagnostics (see the Scaladoc above). */
   val DefaultChecks: Set[String] = Set("d9_consistency")
@@ -95,27 +95,6 @@ object Check {
     if (names("d9_consistency")) {
       val v = dedup.DedupQueries.embeddingClusterViolations(spark, dir)
       println(s"CHECK d9_consistency violations=$v")
-    }
-    // p16 sharded-melt A/B: times the single-job x30 melt against the
-    // G-job sharded mode at this scale and verifies row equality — the
-    // measurement behind the production default (PERF.md r14).
-    if (names("p16_shard_ab")) {
-      def time[A](f: => A): (A, Double) = {
-        val t0 = System.nanoTime(); val a = f
-        (a, (System.nanoTime() - t0) / 1e9)
-      }
-      // two alternating rounds: round 1 pays JVM/codegen/page-cache
-      // warmup (order-biased), round 2 is the fair warm comparison
-      for (round <- 1 to 2) {
-        val (single, t1) = time(
-          profile.ProfileQueries.approxFds(spark, dir).collect().toSeq
-            .map(_.toSeq))
-        val (sharded, t5) = time(
-          profile.ProfileQueries.approxFds(spark, dir, meltShards = 5)
-            .collect().toSeq.map(_.toSeq))
-        println(f"CHECK p16_shard_ab round=$round single_s=$t1%.1f " +
-          f"sharded5_s=$t5%.1f equal=${single == sharded}")
-      }
     }
     // portfolio-wide count-vs-collect diagnostic (r14 verdict #3):
     // Bench drives queries via count(), which lets Catalyst prune any

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{GraftService, Json, Specs}
+import graft.core.{GraftService, Json, ModelRef, Specs}
 
 /** Command-line transport over [[graft.core.GraftService]] — the user
   * surface replacing the reference's REST endpoints one command per
@@ -40,8 +40,9 @@ object Cli {
     if (code != 0) sys.exit(code)
   }
 
-  /** Run one command; 0 on success, 2 on a usage error or a malformed
-    * argument (the message goes to stderr). */
+  /** Run one command; 0 on success, 2 on a usage error, a malformed
+    * argument, a predict on an untrained model or an unreadable file
+    * (the message goes to stderr). */
   private[graft] def run(args: List[String]): Int = args match {
     case root :: rest =>
       val svc = new GraftService(root)
@@ -75,20 +76,28 @@ object Cli {
             case None => println(s"""{"error":"model $id not found"}""")
           }
         case "model" :: "train" :: modelId :: datasetId :: Nil =>
-          val s = LocalSpark.session()
-          try println(s"""{"state":"${
-            svc.trainModel(s, modelId.toInt, datasetId.toInt)}"}""")
-          finally s.stop()
+          resolved(svc, modelId, datasetId) { (m, d) =>
+            val s = LocalSpark.session()
+            try println(s"""{"state":"${svc.trainModel(s, m.id, d)}"}""")
+            finally s.stop()
+          }
         case "model" :: "predict" :: modelId :: datasetId :: Nil =>
-          val s = LocalSpark.session()
-          try {
-            val pred = svc.predictModel(s, modelId.toInt, datasetId.toInt)
-            (pred.columnJson ++ pred.suggestionJson).foreach(println)
-          } finally s.stop()
+          resolved(svc, modelId, datasetId) { (m, d) =>
+            if (m.state != "Complete") throw new GraftService.ClientError(
+              s"model ${m.id} is not trained (state=${m.state})")
+            val s = LocalSpark.session()
+            try {
+              val pred = svc.predictModel(s, m.id, d)
+              (pred.columnJson ++ pred.suggestionJson).foreach(println)
+            } finally s.stop()
+          }
         case "model" :: "delete" :: id :: Nil =>
           println(s"""{"deleted":${svc.deleteModel(id.toInt)}}""")
         case "owl" :: "add" :: name :: format :: file :: rest if rest.size <= 1 =>
-          val doc = java.nio.file.Files.readString(java.nio.file.Paths.get(file))
+          val doc =
+            try java.nio.file.Files.readString(java.nio.file.Paths.get(file))
+            catch { case _: java.io.IOException =>
+              throw new GraftService.ClientError(s"cannot read $file") }
           val ref = svc.createOwl(name, rest.headOption.getOrElse(""), format, doc)
           println(s"""{"id":${ref.id},"name":${Json.str(ref.name)},"format":"${ref.format}"}""")
         case "owl" :: "list" :: Nil =>
@@ -138,5 +147,19 @@ object Cli {
     case _ =>
       System.err.println("usage: graft.Cli <root> <entity> <verb> [args...]")
       2
+  }
+
+  /** Runs `body` on the model and the dataset id that a train or
+    * predict names, parsed and looked up before any Spark session
+    * starts; a missing one prints a not-found line the way
+    * `model state` does. */
+  private def resolved(svc: GraftService, modelId: String, datasetId: String)
+      (body: (ModelRef, Int) => Unit): Unit = {
+    val (m, d) = (modelId.toInt, datasetId.toInt)
+    (svc.getModel(m), svc.getDataset(d)) match {
+      case (None, _) => println(s"""{"error":"model $m not found"}""")
+      case (_, None) => println(s"""{"error":"dataset $d not found"}""")
+      case (Some(model), Some(_)) => body(model, d)
+    }
   }
 }

@@ -201,7 +201,9 @@ final class GraftHttpServer(svc: GraftService, spark: () => SparkSession) {
           case Some(ds) =>
             // async, like the reference: Busy is persisted before this
             // returns; clients poll GET /model/{id} for the final state
-            val st = svc.trainModelAsync(spark(), id.toInt, ds.toInt)
+            // ids parse before spark(), which boots the session lazily
+            val (m, d) = (id.toInt, ds.toInt)
+            val st = svc.trainModelAsync(spark(), m, d)
             respond(ex, 202, s"""{"state":"$st"}""")
           case None => err(ex, 400, "query param dataset required")
         }
@@ -210,7 +212,8 @@ final class GraftHttpServer(svc: GraftService, spark: () => SparkSession) {
           case Some(ds) =>
             // the service releases pipeline caches when its last unit of
             // work ends; the rendered predictions are local rows
-            val pred = svc.predictModel(spark(), id.toInt, ds.toInt)
+            val (m, d) = (id.toInt, ds.toInt)
+            val pred = svc.predictModel(spark(), m, d)
             val cols = pred.columnJson.mkString("[", ",", "]")
             val sugs = pred.suggestionJson.mkString("[", ",", "]")
             respond(ex, 200, s"""{"predictions":$cols,"suggestions":$sugs}""")

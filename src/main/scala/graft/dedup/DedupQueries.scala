@@ -50,19 +50,30 @@ object DedupQueries {
   /** d5 gate: corpora at or below this size take the exact brute-force
     * pair scan; larger corpora generate candidates by hyperplane-LSH band
     * keys and exact-rerank (approximate by design — the price of
-    * avoiding an O(n^2) scan at 100 TB). */
+    * avoiding an O(n^2) scan at 100 TB). A result contract, not a speed
+    * gate: the two arms return different pairs, and the brute DuckDB
+    * twins hold only at or below it. */
   val NearDupBruteMax = 1000L
 
   /** Deduplicated-edge count at or below which [[connectedComponents]]
     * labels components with a single driver-side union-find pass
-    * instead of the star-contraction loop (the p12/p16 row-gated
-    * pattern; ~32 MB of (long, long) rows at the gate — the d7
-    * bounded-collect class, and the bound is enforced by the gate
-    * itself). Near-dup pair graphs are SPARSE by construction (every
-    * producer caps per-bucket candidates), so the edge list is orders
-    * of magnitude smaller than the corpus: sf1 measures 27k embedding
-    * edges, so even sf100 sits well under this gate while a true
-    * 100-TB graph falls back to the loop. */
+    * instead of the star-contraction loop (~32 MB of (long, long) rows
+    * at the gate — the d7 bounded-collect class, and the bound is
+    * enforced by the gate itself). Above it only the loop keeps driver
+    * memory bounded; sf10's d2 graph (~2.45M edges) already takes it.
+    * Same-JVM A/B, 4 cores, `graft.ScaleUp` data, 6 alternating pairs
+    * after one untimed run of each arm, upstream pairs materialized,
+    * full materialization, median [IQR] in s, rows equal in every pair:
+    *
+    * | scale | graph | driver | loop | driver faster |
+    * |---|---|---|---|---|
+    * | sf0.1 | d2-components | 0.38 [0.37–0.40] | 1.17 [1.15–1.31] | 6/6 |
+    * | sf0.1 | d9 | 0.62 [0.60–0.70] | 2.97 [2.81–3.21] | 6/6 |
+    * | sf1 | d2-components | 0.90 [0.85–0.95] | 2.98 [2.77–3.09] | 6/6 |
+    * | sf1 | d9 | 0.89 [0.85–0.93] | 2.93 [2.82–3.04] | 6/6 |
+    *
+    * The loop's rounds of shuffle jobs, checksums and checkpoints cost
+    * 2-2.5 s at every scale the driver arm serves. */
   val CcDriverMaxEdges = 2000000L
   val NdBands = 12
   val NdBits = 4
@@ -711,15 +722,14 @@ object DedupQueries {
     *
     * Below `driverMaxEdges` deduplicated edges the components are
     * instead computed by ONE driver-side union-find pass over the
-    * collected edge list (the p12/p16 row-gated posture): the
-    * distributed loop costs O(rounds) shuffle jobs plus a checksum
-    * action and a lineage checkpoint per round — measured 1-2 s of
-    * fixed job overhead per consumer at sf0.1 — while 2M (long, long)
-    * edges are ~32 MB on the driver and union-find labels them in
-    * milliseconds. The gate input (the edge count) is already computed
-    * for the convergence checksum, so the decision costs nothing, and
-    * above the gate the loop below is byte-identical to before
-    * (CcForcedBranchSpec pins driver/loop equality on the same graph). */
+    * collected edge list: the distributed loop costs O(rounds) shuffle
+    * jobs plus a checksum action and a lineage checkpoint per round
+    * (the measurements are on [[CcDriverMaxEdges]]), while 2M
+    * (long, long) edges are ~32 MB on the driver and union-find labels
+    * them in milliseconds. The gate input (the edge count) is already
+    * computed for the convergence checksum, so the decision costs
+    * nothing (DedupSpec's CC forced-branch test pins driver/loop
+    * equality on the same graph). */
   def connectedComponents(docs: DataFrame, pairs: DataFrame,
       maxRounds: Int = 30,
       driverMaxEdges: Long = CcDriverMaxEdges): DataFrame = {
@@ -3023,8 +3033,7 @@ object DedupQueries {
     * `bruteMax` is the brute/LSH gate, a PARAMETER (production default
     * [[NearDupBruteMax]], baked into the production cache key) so
     * specs can force the banded branch on a small corpus without a
-    * mutable global (the seam style the r13 ADVICE flagged on p12's
-    * `keyScreenGateRows`); the d25 audit grades the same branch with
+    * mutable global; the d25 audit grades the same branch with
     * an oracle. Non-default gates get their own Materialize key so a
     * forced-branch spec never poisons the shared d5/d9/s8 checkpoint. */
   def embeddingPairs(s: SparkSession, dir: String,

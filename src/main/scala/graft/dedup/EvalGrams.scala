@@ -42,7 +42,27 @@ object EvalGrams {
   /** Max distinct eval grams shipped executor-wide as exact strings.
     * ~4M grams ≈ a few hundred MB broadcast at typical shingle
     * lengths — the top of what a real benchmark suite produces and of
-    * what an executor should hold per probe set. */
+    * what an executor should hold per probe set. Above it only the
+    * bloom path keeps broadcast memory bounded.
+    *
+    * The batch side ([[sharedCounts]]) returns the same rows on both
+    * paths, so below the gate the exact broadcast join must earn its
+    * place. Same-JVM A/B, 4 cores, `graft.ScaleUp` data, 6 alternating
+    * pairs after one untimed run of each arm, upstream checkpoints
+    * warm, full materialization, median [IQR] in s, rows equal in every
+    * pair (e1 = the ledger build):
+    *
+    * | scale | query | exact | bloom | exact faster |
+    * |---|---|---|---|---|
+    * | sf0.1 | d7 | 0.569 [0.564–0.581] | 0.641 [0.624–0.671] | 6/6 |
+    * | sf0.1 | e1 | 1.75 [1.68–1.81] | 1.80 [1.76–1.86] | 3/6 |
+    * | sf0.1 | e2 | 1.06 [1.01–1.08] | 1.12 [1.12–1.18] | 5/6 |
+    * | sf1 | d7 | 1.07 [1.01–1.15] | 1.20 [1.16–1.26] | 6/6 |
+    * | sf1 | e1 | 11.5 [11.3–12.0] | 12.5 [12.0–13.3] | 5/6 |
+    * | sf1 | e2 | 6.07 [5.99–6.16] | 6.28 [6.24–6.31] | 5/6 |
+    *
+    * The bloom path pays a filter build and a merge job before its
+    * probe; exact wins by 0.07-1.0 s wherever the eval set fits. */
   final val ExactMax = 4L * 1000 * 1000
 
   /** False-positive rate of the bloom path's filter. */
@@ -161,7 +181,9 @@ object EvalGrams {
     * collected-array [[graft.functions.SetMemberCount]] probe; above
     * it the bloom probe with the estimate semantics documented on the
     * object. Both actions (count, collect/build) complete before this
-    * returns, so nothing stays cached. */
+    * returns, so nothing stays cached. This gate is a result contract,
+    * not a speed gate: above it the counts are bloom estimates, so the
+    * arms' rows differ, and the exact sf0.01 twins hold only below it. */
   def rowProbe(evalG: DataFrame,
       exactMax: Long = ExactMax): Column => Column = {
     val sc = evalG.sparkSession.sparkContext

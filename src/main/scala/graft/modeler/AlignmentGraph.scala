@@ -22,11 +22,6 @@ final class AlignmentGraph(val ontology: Ontology) {
   /** G2: incremental add of one known SSD. */
   def add(model: SemanticModel): this.type = { known :+= model; this }
 
-  /** G2: full rebuild (realign) — drop learned patterns. */
-  def realign(models: Seq[SemanticModel]): this.type = {
-    known = models.toVector; this
-  }
-
   def knownModels: Seq[SemanticModel] = known
 
   /** G1/G3: current weighted edge set — ontology closure plus

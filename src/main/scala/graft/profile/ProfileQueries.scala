@@ -191,22 +191,6 @@ object ProfileQueries {
   /** p12: candidate key columns (orders) — singles plus all pairs. */
   val KeyCols: Seq[String] = Seq("o_custkey", "o_orderdate", "o_orderkey",
     "o_orderpriority", "o_orderstatus", "o_totalprice")
-  /** p12's HLL-screen relative standard deviation (scale path, stage
-    * 1). 0.1 on purpose: finer rsd widens the sketch registers into
-    * thousands of agg-buffer columns and the screen gets SLOWER than
-    * the exact pass it's meant to avoid (measured: rsd 0.02 ~5 s vs
-    * rsd 0.1 ~1 s at sf0.1). */
-  val KeyScreenRsd = 0.1
-  /** p12's screen admission bound, in percent of the row count: a
-    * combo whose HLL estimate is under this share of n cannot be a
-    * key (a true key's estimate sitting 40% under n at 10% rsd is a
-    * 4-sigma event; the DuckDB oracle, which computes uniqueness
-    * exactly, fails the row if the screen ever drops a real key). */
-  val KeyScreenFrac = 60L
-  /** p12's path gate: below this row count the single exact
-    * Expand-x21 agg wins (screen overhead > Expand cost — see the p12
-    * doc comment's measurements); at or above, screen-verify-imply. */
-  val KeyScreenMinRows = 1000000L
   val KeyPairs: Seq[(Int, Int)] =
     for { i <- KeyCols.indices; j <- KeyCols.indices if i < j }
       yield (i, j)
@@ -220,19 +204,23 @@ object ProfileQueries {
     * TANE-paper g3 ballpark for "holds modulo dirty rows"). */
   val ApproxFdTauMicro = 10000L
 
-  /** p16's melt-shard count when the row gate opens. Five jobs = six
-    * pairs per job: measured 2.0x over the single x30 melt at sf10
-    * (684.6 -> 359.3 s warm, full materialization) and 1.1x at sf1 —
-    * the win grows with scale because what it bounds is IN-FLIGHT
-    * shuffle volume (rows x pairs-per-job instead of rows x 30). */
+  /** p16's melt-shard count: the 30 (det, dep) pairs are melted in
+    * this many sequential jobs of six pairs each, which bounds in-flight
+    * shuffle volume at rows x 6 instead of rows x 30. Same-JVM A/B
+    * against the one-job melt of all 30 pairs (4 cores, `graft.ScaleUp`
+    * data, alternating pairs after one untimed run of each arm, full
+    * materialization, median [IQR] in s, rows equal in every pair):
+    *
+    * | scale | one job | 5 shards | one job faster |
+    * |---|---|---|---|
+    * | sf0.1 | 8.00 [6.98–8.61] | 8.10 [7.67–8.67] | 9/16 |
+    * | sf1 | 55.5 [54.7–56.4] | 45.6 [43.4–48.3] | 0/6 |
+    * | sf10 | 641, 560 | 594, 548 | 0/2 |
+    *
+    * (sf10: the two runs of each arm; a pair takes 20 minutes on 4
+    * cores.) The shards tie at sf0.1 and win above it, so they are the
+    * only plan. */
   val P16MeltShards = 5
-
-  /** p16's path gate (the [[KeyScreenMinRows]] posture): below this
-    * row count the single-job x30 melt wins (5x scheduler round-trips
-    * cost more than they save); at or above, the melt is sharded into
-    * [[P16MeltShards]] sequential jobs. 10M = between sf1 (1.5M, where
-    * sharding wins only ~11%) and sf10 (15M, where it wins 2.0x). */
-  val P16ShardMinRows = 10000000L
 
   val FdCandidates: Seq[(String, String, String)] = Seq(
     ("customer", "c_custkey", "c_mktsegment"),
@@ -256,125 +244,51 @@ object ProfileQueries {
     * is flagged as drifted (50000 = 5%). */
   val DriftFlagMicro = 50000L
 
-  /** p12's engine body, extracted so the screen/exact path gate is a
-    * PARAMETER with a production default instead of a mutable global
-    * test seam (the r13 ADVICE item on `keyScreenGateRows`):
-    * ScreenPathSpec forces the screened branch by passing gateRows=1;
-    * production always runs with [[KeyScreenMinRows]]. */
-  def keyDiscovery(s: org.apache.spark.sql.SparkSession, dir: String,
-      gateRows: Long = KeyScreenMinRows): org.apache.spark.sql.DataFrame = {
+  /** p12's engine body: the 21 exact countDistincts (6 singles, 15
+    * pairs) as CONCURRENT single-distinct jobs. A single-distinct agg
+    * plans without Expand (two-phase partial dedup on a 1-2 column
+    * pruned scan), each combo's job is independent, and the scheduler
+    * overlaps them (guide §2.6). The report is 21 rows assembled
+    * driver-side. This one plan beat the HLL screen → verify → imply
+    * plan it replaced at every scale measured (sf0.1, sf1, sf10; see
+    * PERF.md "Size gates re-measured"), so there is no second path. */
+  def keyDiscovery(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
     val cols = KeyCols
     val base = Tables.table(s, dir, "orders")
-    val nullLong = lit(null).cast("long")
-    def report(m: org.apache.spark.sql.DataFrame,
-        singleRows: Seq[org.apache.spark.sql.Column],
-        pairRows: Seq[org.apache.spark.sql.Column]) =
-      m.select(inline(array((singleRows ++ pairRows): _*)))
-        .orderBy(col("combo"))
-    // the gate read is parquet-metadata cheap and n is needed anyway
     val n = base.count()
-    if (n < gateRows) {
-      // small-table path: the 21 exact countDistincts as CONCURRENT
-      // single-distinct jobs instead of ONE Expand-x21 agg. The Expand
-      // materialized 22 copies of every row (wide values included)
-      // before the partial dedup — 3.3M expanded rows at sf0.1 and the
-      // portfolio's most expensive steady-state query (3.4 s). A
-      // single-distinct agg plans WITHOUT Expand (two-phase partial
-      // dedup on a 1-2 column pruned scan), each combo's job is
-      // independent, and the scheduler happily overlaps them (guide
-      // §2.6) — measured 3.41 -> 1.57 s at sf0.1. The report is 21
-      // rows assembled driver-side, the screen path's existing
-      // posture (it already collects its sketch + verify aggregates).
-      // The screen branch is unchanged: above the gate one pass over
-      // the data beats 21, exactly as before.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      def cd(cs: Seq[String]): scala.concurrent.Future[Long] =
-        scala.concurrent.Future(
-          base.agg(countDistinct(col(cs.head),
-            cs.tail.map(col): _*).as("d")).head().getLong(0))
-      try {
-        val singleF = cols.indices.map(i => cd(Seq(cols(i))))
-        val pairF = KeyPairs.map { case (i, j) =>
-          cd(Seq(cols(i), cols(j))) }
-        import scala.concurrent.duration.Duration
-        val singles = singleF.map(f =>
-          scala.concurrent.Await.result(f, Duration.Inf))
-        val pairsD = pairF.map(f =>
-          scala.concurrent.Await.result(f, Duration.Inf))
-        val uniqS = cols.indices.map(i => singles(i) == n)
-        import s.implicits._
-        val singleRows = cols.indices.map { i =>
-          (cols(i), if (uniqS(i)) Some(n) else None,
-            if (uniqS(i)) 1L else 0L, if (uniqS(i)) 1L else 0L)
-        }
-        val pairRows = KeyPairs.zip(pairsD).map { case ((i, j), p) =>
-          val u = p == n
-          (s"${cols(i)}+${cols(j)}", if (u) Some(n) else None,
-            if (u) 1L else 0L,
-            if (u && !uniqS(i) && !uniqS(j)) 1L else 0L)
-        }
-        (singleRows ++ pairRows)
-          .toDF("combo", "n_distinct", "is_unique", "is_minimal_unique")
-          .orderBy(col("combo"))
-      } finally pool.shutdown()
-    } else {
-      // scale path: screen -> verify -> imply
-      // stage 1: HLL screen — one scan, no Expand
-      val screenAggs =
-        cols.indices.map(i =>
-          approx_count_distinct(col(cols(i)), KeyScreenRsd)
-            .as(s"s_$i")) ++
-        KeyPairs.map { case (i, j) =>
-          approx_count_distinct(struct(col(cols(i)), col(cols(j))),
-            KeyScreenRsd).as(s"p_${i}_$j") }
-      val sc = base.agg(screenAggs.head, screenAggs.tail: _*)
-        .collect().head
-      def pass(est: Long): Boolean = est * 100L >= n * KeyScreenFrac
-      val candS = cols.indices
-        .filter(i => pass(sc.getLong(sc.fieldIndex(s"s_$i")))).toSet
-      // stage 2: exact verify of candidate singles
-      val uniqueS: Set[Int] =
-        if (candS.isEmpty) Set.empty
-        else {
-          val sAggs = candS.toSeq.sorted
-            .map(i => countDistinct(col(cols(i))).as(s"s_$i"))
-          val sr = base.agg(count(lit(1)).as("n"), sAggs: _*)
-            .collect().head
-          candS.filter(i => sr.getLong(sr.fieldIndex(s"s_$i")) == n)
-        }
-      // stage 3: pair implication + exact verify of the remainder
-      val impliedP = KeyPairs.filter { case (i, j) =>
-        uniqueS(i) || uniqueS(j) }.toSet
-      val candP = KeyPairs.filter { case (i, j) =>
-        !impliedP((i, j)) &&
-          pass(sc.getLong(sc.fieldIndex(s"p_${i}_$j"))) }.toSet
-      val exactAggs = Seq(count(lit(1)).as("n")) ++
-        candP.toSeq.sorted.map { case (i, j) =>
-          countDistinct(col(cols(i)), col(cols(j))).as(s"p_${i}_$j") }
-      val m = base.agg(exactAggs.head, exactAggs.tail: _*)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    def cd(cs: Seq[String]): scala.concurrent.Future[Long] =
+      scala.concurrent.Future(
+        base.agg(countDistinct(col(cs.head),
+          cs.tail.map(col): _*).as("d")).head().getLong(0))
+    try {
+      val singleF = cols.indices.map(i => cd(Seq(cols(i))))
+      val pairF = KeyPairs.map { case (i, j) =>
+        cd(Seq(cols(i), cols(j))) }
+      import scala.concurrent.duration.Duration
+      val singles = singleF.map(f =>
+        scala.concurrent.Await.result(f, Duration.Inf))
+      val pairsD = pairF.map(f =>
+        scala.concurrent.Await.result(f, Duration.Inf))
+      val uniqS = cols.indices.map(i => singles(i) == n)
+      import s.implicits._
       val singleRows = cols.indices.map { i =>
-        val u = lit(uniqueS(i))
-        struct(lit(cols(i)).as("combo"),
-          when(u, col("n")).otherwise(nullLong).as("n_distinct"),
-          u.cast("long").as("is_unique"),
-          u.cast("long").as("is_minimal_unique"))
+        (cols(i), if (uniqS(i)) Some(n) else None,
+          if (uniqS(i)) 1L else 0L, if (uniqS(i)) 1L else 0L)
       }
-      val pairRows = KeyPairs.map { case (i, j) =>
-        val u = if (impliedP((i, j))) lit(true)
-          else if (candP((i, j))) col(s"p_${i}_$j") === col("n")
-          else lit(false)
-        struct(lit(s"${cols(i)}+${cols(j)}").as("combo"),
-          when(u, col("n")).otherwise(nullLong).as("n_distinct"),
-          u.cast("long").as("is_unique"),
-          // minimal iff unique and neither member is itself a key;
-          // implied pairs are by construction non-minimal
-          (u && lit(!uniqueS(i) && !uniqueS(j))).cast("long")
-            .as("is_minimal_unique"))
+      val pairRows = KeyPairs.zip(pairsD).map { case ((i, j), p) =>
+        val u = p == n
+        (s"${cols(i)}+${cols(j)}", if (u) Some(n) else None,
+          if (u) 1L else 0L,
+          if (u && !uniqS(i) && !uniqS(j)) 1L else 0L)
       }
-      report(m, singleRows, pairRows)
-    }
+      (singleRows ++ pairRows)
+        .toDF("combo", "n_distinct", "is_unique", "is_minimal_unique")
+        .orderBy(col("combo"))
+    } finally pool.shutdown()
   }
 
   /** p11's engine (r16): the SAME two-bounded-pass exact-quantile
@@ -481,33 +395,17 @@ object ProfileQueries {
       .orderBy(col("col_name"), col("q"))
   }
 
-  /** p16's engine body, with the 100-TB mitigation the r13 verdict
-    * asked to build (not just document): the x30 melt replicates the
-    * orders scan thirty-fold INSIDE ONE JOB — the documented cost
-    * driver (95.9 s at sf100) and, at petabyte scale, a single shuffle
-    * carrying 30x the table's rows. `meltShards` > 1 splits the pair
-    * list into that many SEQUENTIAL jobs: each job scans orders once,
-    * melts only its pairs/meltShards slice (bounding in-flight shuffle
-    * volume at rows x pairs/G), and reduces to its <=|slice| final
-    * rows, which are collected (30 rows total across all shards — the
-    * d7 bounded-collect class) and reassembled. Verdict-equal by
-    * construction: the pair groups are disjoint and every downstream
-    * aggregate is keyed by (det_col, dep_col), so sharding the melt
-    * cannot change any group's rows. ApproxFdSpec forces the branch
-    * and asserts row-set equality with the single-job plan.
-    * `meltShards` semantics: 0 (the production default) = row-gated
-    * auto — single-job below [[P16ShardMinRows]] rows, [[P16MeltShards]]
-    * jobs at or above (sf10 A/B: 2.0x; the gate read is
-    * parquet-metadata cheap, p12's pattern); an explicit value forces
-    * that shard count (the spec's forced-branch seam). */
-  def approxFds(s: org.apache.spark.sql.SparkSession, dir: String,
-      meltShards: Int = 0): org.apache.spark.sql.DataFrame = {
+  /** p16's engine body. The 30 ordered pairs are melted in
+    * [[P16MeltShards]] SEQUENTIAL jobs: each job scans orders once,
+    * melts only its slice of the pairs and reduces to its <= |slice|
+    * final rows, which are collected (30 rows in all — the d7
+    * bounded-collect class) and reassembled. Sharding cannot change a
+    * verdict: the pair groups are disjoint and every aggregate is keyed
+    * by (det_col, dep_col). */
+  def approxFds(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
     val cols = KeyCols
     val base = Tables.table(s, dir, "orders")
-    val shards =
-      if (meltShards > 0) meltShards
-      else if (base.count() >= P16ShardMinRows) P16MeltShards
-      else 1
     val pairs = for { i <- cols.indices; j <- cols.indices if i != j }
       yield (i, j)
     def shardPlan(group: Seq[(Int, Int)]): org.apache.spark.sql.DataFrame = {
@@ -541,20 +439,15 @@ object ProfileQueries {
         .withColumn("holds_approx",
           (col("g3_error_micro") <= ApproxFdTauMicro).cast("long"))
     }
-    if (shards <= 1) shardPlan(pairs)
+    // collect() per shard is what MAKES them separate jobs — a lazy
+    // union would hand Catalyst one plan with every subtree, the
+    // one-job melt of all 30 pairs
+    val groups = pairs.grouped(
+      (pairs.size + P16MeltShards - 1) / P16MeltShards).toSeq
+    val rows = groups.flatMap(g => shardPlan(g).collect())
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(rows.asJava, shardPlan(pairs).schema)
       .orderBy(col("det_col"), col("dep_col"))
-    else {
-      // collect() per shard is what MAKES them separate jobs — a lazy
-      // union would hand Catalyst one plan with every subtree and
-      // reproduce exactly the single-job x30 melt this mode bounds
-      val groups = pairs.grouped(
-        math.max(1, (pairs.size + shards - 1) / shards)).toSeq
-      val schema = shardPlan(pairs).schema
-      val rows = groups.flatMap(g => shardPlan(g).collect())
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema)
-        .orderBy(col("det_col"), col("dep_col"))
-    }
   }
 
   val defs: Map[String, QueryDef] = Map(
@@ -955,43 +848,12 @@ object ProfileQueries {
     //      stats battery — HyUCC/Metanome family): which single
     //      columns and column pairs uniquely identify an orders row,
     //      and which of those are MINIMAL (no unique proper subset).
-    //
-    //      Scale shape (screen -> verify -> imply, the HyUCC posture,
-    //      behind a [[KeyScreenMinRows]] size gate — the d5/d7
-    //      pattern): an exact multi-countDistinct over all 21 combos
-    //      plans as one Expand that multiplies the scan x21 — correct,
-    //      and actually the CHEAPEST plan below ~1M rows, but the
-    //      portfolio's costliest steady-state profile pass at 100x
-    //      (measured 324 s at sf10 vs ~165 s screened). Above the
-    //      gate, three stages:
-    //
-    //      1. SCREEN: 21 HLL sketches ([[KeyScreenRsd]]) in ONE
-    //         un-Expanded scan (HLL needs no per-group dedup; finer
-    //         rsd is a trap — the sketch registers widen the agg
-    //         buffer row into thousands of columns and the pass gets
-    //         SLOWER than exact). Combos under [[KeyScreenFrac]] of
-    //         the row count cannot be keys — a true key's estimate
-    //         sitting 40% under n at 10% rsd is a 4-sigma event.
-    //      2. VERIFY singles: exact countDistinct for candidate
-    //         single columns only.
-    //      3. IMPLY pairs: a pair containing a proven-unique single
-    //         is unique with n_distinct = n BY SET LOGIC (the HyUCC
-    //         superset-pruning rule — no counting, and it skips
-    //         exactly the worst dedup states: key x anything has full
-    //         row cardinality). Only candidate pairs with NO unique
-    //         member get the exact Expand — typically 1-2 of 15.
-    //
-    //      Output contract: n_distinct is the EXACT count for proven
-    //      keys and NULL otherwise — never an estimate. That makes the
-    //      report invariant to which borderline non-keys the screen
-    //      happened to admit, so the DuckDB oracle (all-exact) matches
-    //      bit-for-bit as long as the screen has no false negatives —
-    //      i.e. the oracle actively tests the screen's soundness.
-    //      The screen/verify one-row collects are bounded at any
-    //      corpus size (d7's size-gate pattern). Null caveat as
-    //      before: multi-column countDistinct drops rows with ANY null
-    //      member; orders has no nulls, a null-bearing table would
-    //      coalesce to sentinels first.
+    //      Shape: 21 concurrent single-distinct jobs (see
+    //      [[keyDiscovery]]). Output contract: n_distinct is the EXACT
+    //      count for keys and NULL otherwise. Null caveat: multi-column
+    //      countDistinct drops rows with ANY null member; orders has no
+    //      nulls, a null-bearing table would coalesce to sentinels
+    //      first.
     "p12_key_discovery" -> QueryDef(
       (s, dir) => keyDiscovery(s, dir),
       Some {
@@ -1277,17 +1139,14 @@ object ProfileQueries {
     //      carry EXACT dependencies (one mistyped row kills p9's
     //      fd_holds), so the approximate report with an explicit error
     //      is the one profilers actually act on.
-    //      Shape: ONE corpus scan melts the 30 ordered pairs (struct
-    //      explode; values cast to string only to homogenize the
-    //      struct type — grouping structure is unchanged, which is all
-    //      g3 reads), then three shrinking key-equality groupBys:
-    //      (pair,x,y) counts -> per-(pair,x) max/sum -> per-pair
-    //      report. Map-side combine bounds the first shuffle by
-    //      distinct (x,y) per pair, the report is 30 rows at any
-    //      corpus size. 100-TB note: the x30 melt trades scan count
-    //      for shuffle volume exactly like p12's Expand-x21 (one pass
-    //      beats 30 passes until the per-pair distinct volume
-    //      dominates; shard the pair list across jobs at that point).
+    //      Shape: the 30 ordered pairs are melted (values cast to
+    //      string only to homogenize the union's type — grouping
+    //      structure is unchanged, which is all g3 reads) in
+    //      [[P16MeltShards]] sequential jobs, each followed by three
+    //      shrinking key-equality groupBys: (pair,x,y) counts ->
+    //      per-(pair,x) max/sum -> per-pair report. Map-side combine
+    //      bounds the first shuffle by distinct (x,y) per pair, the
+    //      report is 30 rows at any corpus size.
     "p16_approx_fds" -> QueryDef(
       (s, dir) => approxFds(s, dir),
       Some {

@@ -10,10 +10,6 @@ import org.apache.spark.sql.functions._
   * reference's hand-rolled loaders (reference: matcher CsvDataLoader.scala:42-111).
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -76,8 +72,4 @@ object Tables {
         finally ls.close()
       } else java.nio.file.Files.size(p)
     } catch { case _: Exception => Long.MaxValue }
-
-  /** All tables as a name->DataFrame map. */
-  def all(spark: SparkSession, dir: String): Map[String, DataFrame] =
-    names.map(n => n -> table(spark, dir, n)).toMap
 }

@@ -2,12 +2,16 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards the source tree against code that no production path reaches:
-  * every top-level `object`, `class` or `trait` in src/main must be named
-  * somewhere in src/main besides its own declaration (comments do not
-  * count). Objects that define `main` are entry points and exempt. There
-  * is no allowlist: a definition only its spec calls belongs in test
-  * scope or nowhere. */
+/** Guards the source tree against code that nothing reaches:
+  *  - every top-level `object`, `class` or `trait` in src/main must be
+  *    named somewhere in src/main besides its own declaration. Objects
+  *    that define `main` are entry points and exempt. A definition only
+  *    its spec calls belongs in test scope or nowhere;
+  *  - every member `def`, `val` or `var` of a top-level definition
+  *    (`override` and `implicit` ones aside: the compiler calls those)
+  *    must be named somewhere in src/main, src/test or the perfbench
+  *    harness besides its own declaration.
+  * Comments do not count, and there is no allowlist. */
 class ReachabilitySpec extends AnyFunSuite {
   import ReachabilitySpec._
 
@@ -26,14 +30,7 @@ class ReachabilitySpec extends AnyFunSuite {
   }
 
   test("every top-level definition in src/main is named by src/main") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val texts = {
-      val s = Files.walk(Paths.get("src/main"))
-      try s.iterator().asScala.map(_.toString).filter(_.endsWith(".scala"))
-        .map(f => stripComments(Files.readString(Paths.get(f)))).toSeq
-      finally s.close()
-    }
+    val texts = sources("src/main")
     assert(texts.size > 50, s"src/main scan found only ${texts.size} files")
     // (name, whether the declaration's top-level segment defines main)
     val decls = texts.flatMap { t =>
@@ -53,6 +50,23 @@ class ReachabilitySpec extends AnyFunSuite {
     assert(unnamed.isEmpty,
       s"named nowhere in src/main but their own declarations: $unnamed")
   }
+
+  test("every member def/val/var in src/main is named outside its declaration") {
+    val main = sources("src/main")
+    val all = main ++ sources("src/test") ++ sources("perfbench/harness/src")
+    val decls = main.flatMap(MemberDecl.findAllMatchIn(_))
+      .filterNot(m => m.group(1).contains("override") ||
+        m.group(1).contains("implicit"))
+      .map(_.group(2))
+    assert(decls.size > 500, s"src/main scan found only ${decls.size} members")
+    val declCount = decls.groupBy(identity).view.mapValues(_.size).toMap
+    val unnamed = declCount.keys.filter { name =>
+      val word = ("\\b" + name + "\\b").r
+      all.map(word.findAllIn(_).size).sum <= declCount(name)
+    }.toSeq.sorted
+    assert(unnamed.isEmpty,
+      s"named nowhere but their own declarations: $unnamed")
+  }
 }
 
 object ReachabilitySpec {
@@ -61,6 +75,23 @@ object ReachabilitySpec {
   private val TopLevelDecl =
     ("(?m)^(?:(?:final|sealed|abstract|case|implicit|private|protected)" +
       "(?:\\[\\w+\\])?\\s+)*(object|class|trait)\\s+([A-Za-z_]\\w*)").r
+
+  /** A member declaration: two-space indent (the body of a column-0
+    * definition), then modifiers (group 1), `def`/`val`/`var` and the
+    * name (group 2). */
+  private val MemberDecl =
+    ("(?m)^  ((?:(?:private|protected|final|lazy|override|implicit)" +
+      "(?:\\[\\w+\\])?\\s+|@\\w+\\s+)*)(?:def|val|var)\\s+([A-Za-z_]\\w*)").r
+
+  /** The comment-stripped text of every .scala file under `dir`. */
+  private def sources(dir: String): Seq[String] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator().asScala.map(_.toString).filter(_.endsWith(".scala"))
+      .map(f => stripComments(Files.readString(Paths.get(f)))).toSeq
+    finally s.close()
+  }
 
   private val CharLiteral = """'(?:\\u[0-9a-fA-F]{4}|\\.|[^\\'\n])'""".r
 

@@ -33,23 +33,6 @@ class ApproxFdSpec extends SparkSpec {
     d
   }
 
-  test("p16 sharded-melt mode: per-shard jobs reproduce the single-job " +
-      "verdicts row for row (fixture AND sf0.001)") {
-    // the forced branch: G sequential jobs, each melting only its
-    // pair slice — bounded in-flight shuffle volume at scale, equal
-    // output by construction (disjoint pair groups, per-pair keyed aggs)
-    def rows(d: String, shards: Int) =
-      ProfileQueries.approxFds(spark, d, meltShards = shards)
-        .collect().map(_.toSeq).toSeq
-    for (d <- Seq(dir, "/root/testdata/sf0.001")) {
-      val single = rows(d, 1)
-      assert(rows(d, 3) === single, s"3-shard melt diverged on $d")
-      // degenerate extremes: one pair per job, and G > |pairs|
-      assert(rows(d, 30) === single, s"30-shard melt diverged on $d")
-      assert(rows(d, 100) === single, s"overspilt melt diverged on $d")
-    }
-  }
-
   test("p16: hand-computed g3 errors and exact/approx flags") {
     val out = graft.SparkEntry.queries("p16_approx_fds")(spark, dir)
       .collect().map { r =>

@@ -50,14 +50,13 @@ class QuantileSpec extends SparkSpec {
     assert(out("o_orderstatus")._2 === 0L)
     assert(out("o_orderpriority")._2 === 0L)
     // proven keys report the exact count = row count; everything else
-    // reports NULL (never an HLL estimate)
+    // reports NULL (never an estimate)
     val total = graft.sources.Tables.table(spark, sf, "orders").count()
     out.foreach { case (k, (nd, uniq, _)) =>
       if (uniq === 1L) assert(nd === Some(total), k)
       else assert(nd === None, s"$k: non-key must report NULL n_distinct")
     }
-    // the screen never drops a real key: recompute uniqueness exactly
-    // for every combo and compare verdicts
+    // recompute uniqueness exactly for every combo and compare verdicts
     val cols = ProfileQueries.KeyCols
     val orders = graft.sources.Tables.table(spark, sf, "orders")
     import org.apache.spark.sql.functions.{col, countDistinct}
