@@ -95,7 +95,7 @@ class Octopus(
           // the alignment graph — the edge export above is for consumers,
           // the model list is the graph's actual state
           Files.writeString(Paths.get(s"$workDir/known_models.jsonl"),
-            knownModels.map(_.toJson.replace("\n", "")).mkString("\n"))
+            knownModels.map(_.toJson).mkString("\n"))
           // full features config (activeFeatures/groups/params + resolved
           // assembler column order) rides with the model artifacts
           Files.writeString(Paths.get(s"$workDir/features.json"), cfg.toJson)

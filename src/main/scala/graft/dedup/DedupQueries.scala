@@ -2344,8 +2344,9 @@ object DedupQueries {
     //      ORACLE EXACTNESS: candidate generation here is pure integer
     //      arithmetic — vectors quantized to micro units (round(v*1e6)
     //      longs), and the centered sign bit computed in the cleared
-    //      form n*(w_p . qv) >= (w_p . qsum), which is exactly
-    //      sign(dot(qv - mean(qv), plane)) with no FP anywhere — so the
+    //      form n*(w_p . qv) >= (w_p . qsum) by
+    //      [[graft.functions.HyperplaneBandKeys.exactKeys]], which is
+    //      exactly sign(dot(qv - mean(qv), plane)) — so the
     //      DuckDB twin reproduces the found-set bit-for-bit (an FP
     //      center would make candidacy hinge on summation order). The
     //      REAL FP branch is graded against this audit's curve in
@@ -2356,88 +2357,14 @@ object DedupQueries {
     //      Scale: after the 1-row min(vec_id) lookup and the 1-row
     //      (n, 64 component sums) stats collect (both the d21/d7
     //      bounded-collect class), every stage is slice-bounded —
-    //      the audit costs the same at sf0.01 and at 100 TB.
+    //      the audit costs the same at sf0.01 and at 100 TB. d25 is
+    //      d26's (D25Bits, NdBands) row plus n_missed
+    //      ([[embeddingLshAudit]]).
     "d25_embedding_lsh_recall" -> QueryDef(
-      (s, dir) => {
-        val dims = 64
-        val planes = NdBands * D25Bits
-        val e0 = Tables.table(s, dir, "embeddings")
-          .select(col("vec_id"), Text.asDouble(col("embedding")).as("v"))
-        val hiRow = e0.agg(min(col("vec_id"))).collect().head
-        val hi = if (hiRow.isNullAt(0)) Long.MinValue
-          else hiRow.getLong(0) + NdEvalMaxIds
-        val slice = e0.filter(col("vec_id") < hi)
-          .withColumn("qv",
-            transform(col("v"), x => round(x * 1e6).cast("long")))
-          .withColumn("nrm", Text.norm(col("v")))
-          .pipelineCache()
-        // one bounded 1-row collect: slice size + 64 quantized sums
-        val st = slice.agg(count(lit(1)).as("n"),
-          (0 until dims).map(d =>
-            sum(element_at(col("qv"), d + 1)).as(s"s$d")): _*)
-          .collect().head
-        val n = st.getLong(0)
-        val qsum = (0 until dims).map(d =>
-          if (st.isNullAt(d + 1)) 0L else st.getLong(d + 1))
-        val poff: IndexedSeq[Long] = (0 until planes).map(p =>
-          (0 until dims).map(d =>
-            if (Text.planeWeight(p, d) > 0) qsum(d) else -qsum(d)).sum)
-        def pdot(p: Int): Column = {
-          val w = typedLit((0 until dims).map(d =>
-            Text.planeWeight(p, d).toLong))
-          aggregate(zip_with(col("qv"), w, (a, b) => a * b),
-            lit(0L), (acc, x) => acc + x)
-        }
-        // key projection materialized BEFORE the explode (the
-        // embeddingPairsLsh codegen note); 3 consumers share it
-        val keyed = slice.select(col("vec_id") +:
-          (0 until NdBands).map { b =>
-            (0 until D25Bits).map { i =>
-              val p = b * D25Bits + i
-              when(pdot(p) * lit(n) >= lit(poff(p)), lit(1L << i))
-                .otherwise(lit(0L))
-            }.reduce(_ + _).as(s"bk$b")
-          }: _*)
-          .pipelineCache()
-        val banded = keyed.select(col("vec_id"),
-          posexplode(array((0 until NdBands).map(b => col(s"bk$b")): _*)))
-          .toDF("vec_id", "band", "bk")
-        val hot = banded.groupBy(col("band"), col("bk"))
-          .agg(count(lit(1)).as("bsz"))
-          .filter(col("bsz") > NdMaxBucket)
-          .select(col("band"), col("bk"))
-        val capped = banded.join(broadcast(hot),
-          Seq("band", "bk"), "left_anti")
-        val cands = capped.as("x").join(capped.as("y"),
-            col("x.band") === col("y.band") &&
-              col("x.bk") === col("y.bk") &&
-              col("x.vec_id") < col("y.vec_id"))
-          .select(col("x.vec_id").as("vec1"), col("y.vec_id").as("vec2"))
-          .distinct()
-          .withColumn("hit", lit(1L))
-        val truth = slice.as("a")
-          .join(slice.as("b"), col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("vec1"), col("b.vec_id").as("vec2"),
-            round(Text.dot(col("a.v"), col("b.v")) /
-              (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-          .filter(col("cos") >= NearDupCosThreshold)
-          .withColumn("cband",
-            expr("cast(round(cos * 1e6) as bigint) div 100000"))
-        val agged = truth.join(cands, Seq("vec1", "vec2"), "left")
-          .groupBy(col("cband"))
-          .agg(count(lit(1)).as("nt"),
-            coalesce(sum(col("hit")), lit(0L)).as("nf"))
-        val grid = s.range(4, 11).select(col("id").as("cband"))
-        grid.join(agged, Seq("cband"), "left")
-          .select(col("cband").as("cos_band"),
-            coalesce(col("nt"), lit(0L)).as("n_truth"),
-            coalesce(col("nf"), lit(0L)).as("n_found"),
-            (coalesce(col("nt"), lit(0L)) - coalesce(col("nf"), lit(0L)))
-              .as("n_missed"),
-            expr("""coalesce(nf, 0L) * 1000000L
-              div nullif(coalesce(nt, 0L), 0L)""").as("recall_micro"))
-          .orderBy(col("cos_band"))
-      },
+      (s, dir) => embeddingLshAudit(s, dir, Seq((D25Bits, NdBands)))
+        .select(col("cos_band"), col("n_truth"), col("n_found"),
+          (col("n_truth") - col("n_found")).as("n_missed"),
+          col("recall_micro")),
       Some(s"""-- integer-exact twin of the audit's candidate channel:
       -- plane weights are graft.text.Text.planeWeight's formula,
       -- centering is the cleared integer form n*(w.qv) >= (w.qsum)
@@ -2529,109 +2456,7 @@ object DedupQueries {
     //      candidate bit-for-bit; slice-bounded, so the sweep costs
     //      the same at sf0.01 and at 100 TB.
     "d26_lsh_geometry_sweep" -> QueryDef(
-      (s, dir) => {
-        import s.implicits._
-        val dims = 64
-        val e0 = Tables.table(s, dir, "embeddings")
-          .select(col("vec_id"), Text.asDouble(col("embedding")).as("v"))
-        val hiRow = e0.agg(min(col("vec_id"))).collect().head
-        val hi = if (hiRow.isNullAt(0)) Long.MinValue
-          else hiRow.getLong(0) + NdEvalMaxIds
-        val slice = e0.filter(col("vec_id") < hi)
-          .withColumn("qv",
-            transform(col("v"), x => round(x * 1e6).cast("long")))
-          .withColumn("nrm", Text.norm(col("v")))
-          .pipelineCache()
-        val st = slice.agg(count(lit(1)).as("n"),
-          (0 until dims).map(d =>
-            sum(element_at(col("qv"), d + 1)).as(s"s$d")): _*)
-          .collect().head
-        val n = st.getLong(0)
-        val qsum = (0 until dims).map(d =>
-          if (st.isNullAt(d + 1)) 0L else st.getLong(d + 1))
-        // The plane family as DATA, not literals: d25 grades ONE
-        // geometry, so its 96-plane literal projection codegens fine —
-        // but 7 geometries totalling ~2,800 plane-dot expressions made
-        // the literal form a 10 s DRIVER-side analysis/codegen bill at
-        // any sf (measured; the 500-row slice itself is trivial).
-        // Relational form instead: one (p, d, w) frame broadcast into
-        // a melt join, sign bits computed once for the SHARED plane
-        // prefix (geometry (b1,n1) uses planes 0..b1*n1-1 of the same
-        // family), then each geometry just bit-packs its prefix.
-        // Integer-exact as before — long products, order-free sums.
-        val maxPlanes = D26Geometries.map { case (b, bd) => b * bd }.max
-        val planes = (0 until maxPlanes).flatMap(p =>
-          (0 until dims).map(d =>
-            (p, d, Text.planeWeight(p, d).toLong))).toDF("p", "d", "w")
-        val poffDf = (0 until maxPlanes).map(p =>
-          (p, (0 until dims).map(d =>
-            if (Text.planeWeight(p, d) > 0) qsum(d) else -qsum(d)).sum))
-          .toDF("p", "off")
-        val signs = slice
-          .select(col("vec_id"), posexplode(col("qv")))
-          .toDF("vec_id", "d", "q")
-          .join(broadcast(planes), "d")
-          .groupBy(col("vec_id"), col("p"))
-          .agg(sum(col("w") * col("q")).as("dt"))
-          .join(broadcast(poffDf), "p")
-          .select(col("vec_id"), col("p"),
-            when(col("dt") * lit(n) >= col("off"), lit(1L))
-              .otherwise(lit(0L)).as("sgn"))
-          .pipelineCache()
-        // ALL geometries in one keyed pipeline (the twin's own shape):
-        // geometry id rides the keys, so the whole sweep is ONE
-        // groupBy / hot-count / anti-join / self-join chain instead of
-        // 7 — measured 7.1 s -> ~3 s at sf0.1 (pure per-job overhead;
-        // the data is slice-bounded either way)
-        val geomSpine = D26Geometries
-          .map { case (b, bd) => (b.toLong, bd.toLong) }
-          .toDF("bits", "bands")
-        val gkey = Seq("bits", "bands", "band", "bk")
-        val banded = signs
-          .join(broadcast(geomSpine), col("p") < col("bits") * col("bands"))
-          .withColumn("band", expr("p div bits"))
-          .withColumn("bit", expr("shiftleft(sgn, cast(p % bits as int))"))
-          .groupBy(col("bits"), col("bands"), col("vec_id"), col("band"))
-          .agg(sum(col("bit")).as("bk"))
-        val hot = banded.groupBy(col("bits"), col("bands"),
-            col("band"), col("bk"))
-          .agg(count(lit(1)).as("bsz"))
-          .filter(col("bsz") > NdMaxBucket)
-          .select(col("bits"), col("bands"), col("band"), col("bk"))
-        val capped = banded.join(broadcast(hot), gkey, "left_anti")
-        val candsAll = capped.as("x").join(capped.as("y"),
-            col("x.bits") === col("y.bits") &&
-              col("x.bands") === col("y.bands") &&
-              col("x.band") === col("y.band") &&
-              col("x.bk") === col("y.bk") &&
-              col("x.vec_id") < col("y.vec_id"))
-          .select(col("x.bits").as("bits"), col("x.bands").as("bands"),
-            col("x.vec_id").as("vec1"), col("y.vec_id").as("vec2"))
-          .distinct()
-          .withColumn("hit", lit(1L))
-        val truth = slice.as("a")
-          .join(slice.as("b"), col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("vec1"), col("b.vec_id").as("vec2"),
-            round(Text.dot(col("a.v"), col("b.v")) /
-              (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-          .filter(col("cos") >= NearDupCosThreshold)
-          .withColumn("cband",
-            expr("cast(round(cos * 1e6) as bigint) div 100000"))
-        val agged = truth.crossJoin(broadcast(geomSpine))
-          .join(candsAll, Seq("bits", "bands", "vec1", "vec2"), "left")
-          .groupBy(col("bits"), col("bands"), col("cband"))
-          .agg(count(lit(1)).as("nt"),
-            coalesce(sum(col("hit")), lit(0L)).as("nf"))
-        val grid = geomSpine.crossJoin(
-          s.range(4, 11).select(col("id").as("cband")))
-        grid.join(agged, Seq("bits", "bands", "cband"), "left")
-          .select(col("bits"), col("bands"), col("cband").as("cos_band"),
-            coalesce(col("nt"), lit(0L)).as("n_truth"),
-            coalesce(col("nf"), lit(0L)).as("n_found"),
-            expr("""coalesce(nf, 0L) * 1000000L
-              div nullif(coalesce(nt, 0L), 0L)""").as("recall_micro"))
-          .orderBy(col("bits"), col("bands"), col("cos_band"))
-      },
+      (s, dir) => embeddingLshAudit(s, dir, D26Geometries),
       Some(s"""-- integer-exact twin of d26's per-geometry candidate
       -- channels (one plane family, global plane index p = band*bits+i
       -- per geometry, same md5-parity weights as d25's twin)
@@ -2852,6 +2677,88 @@ object DedupQueries {
       .select(col("x.doc_id").as("doc1"), col("y.doc_id").as("doc2"))
       .distinct()
 
+  /** d25/d26's engine: embedding-LSH recall per cosine-decile band at
+    * each `(bits, bands)` geometry of `geoms`, over the min-anchored
+    * [[NdEvalMaxIds]] slice. Output (bits, bands, cos_band, n_truth,
+    * n_found, recall_micro), one row per geometry and cos band 4..10.
+    * Keys come from one [[graft.functions.HyperplaneBandKeys.exactKeys]]
+    * call per geometry (constant-size generated code each), centered
+    * on the slice's integer mean; the geometry rides every bucket key,
+    * so the whole sweep is ONE hot-count / anti-join / self-join chain.
+    * Every stage after the two 1-row collects is slice-bounded. */
+  private def embeddingLshAudit(s: SparkSession, dir: String,
+      geoms: Seq[(Int, Int)]): DataFrame = {
+    import s.implicits._
+    val dims = 64
+    val e0 = Tables.table(s, dir, "embeddings")
+      .select(col("vec_id"), Text.asDouble(col("embedding")).as("v"))
+    val hiRow = e0.agg(min(col("vec_id"))).collect().head
+    val hi = if (hiRow.isNullAt(0)) Long.MinValue
+      else hiRow.getLong(0) + NdEvalMaxIds
+    val slice = e0.filter(col("vec_id") < hi)
+      .withColumn("qv",
+        transform(col("v"), x => round(x * 1e6).cast("long")))
+      .withColumn("nrm", Text.norm(col("v")))
+      .pipelineCache()
+    // one bounded 1-row collect: slice size + 64 quantized sums
+    val st = slice.agg(count(lit(1)).as("n"),
+      (0 until dims).map(d =>
+        sum(element_at(col("qv"), d + 1)).as(s"s$d")): _*)
+      .collect().head
+    val n = st.getLong(0)
+    val qsum = (0 until dims).map(d =>
+      if (st.isNullAt(d + 1)) 0L else st.getLong(d + 1))
+    // key projection cached BEFORE the explode (the embeddingPairsLsh
+    // codegen note); 3 consumers share it
+    val keyed = slice.select(col("vec_id"), array(geoms.map {
+        case (bits, bands) => struct(lit(bits.toLong).as("bits"),
+          lit(bands.toLong).as("bands"),
+          graft.functions.HyperplaneBandKeys.exactKeys(col("qv"), bands,
+            bits, dims, qsum, n).as("bks"))
+      }: _*).as("gs"))
+      .pipelineCache()
+    val banded = keyed.select(col("vec_id"), inline(col("gs")))
+      .select(col("bits"), col("bands"), col("vec_id"),
+        explode(col("bks")).as("bk"))
+    val gkey = Seq("bits", "bands", "bk")
+    val hot = banded.groupBy(gkey.map(col): _*)
+      .agg(count(lit(1)).as("bsz"))
+      .filter(col("bsz") > NdMaxBucket)
+      .select(gkey.map(col): _*)
+    val capped = banded.join(broadcast(hot), gkey, "left_anti")
+    val cands = capped.as("x").join(capped.as("y"),
+        gkey.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
+          col("x.vec_id") < col("y.vec_id"))
+      .select(col("x.bits").as("bits"), col("x.bands").as("bands"),
+        col("x.vec_id").as("vec1"), col("y.vec_id").as("vec2"))
+      .distinct()
+      .withColumn("hit", lit(1L))
+    val truth = slice.as("a")
+      .join(slice.as("b"), col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("vec1"), col("b.vec_id").as("vec2"),
+        round(Text.dot(col("a.v"), col("b.v")) /
+          (col("a.nrm") * col("b.nrm")), 6).as("cos"))
+      .filter(col("cos") >= NearDupCosThreshold)
+      .withColumn("cband",
+        expr("cast(round(cos * 1e6) as bigint) div 100000"))
+    val geomSpine = geoms.map { case (b, bd) => (b.toLong, bd.toLong) }
+      .toDF("bits", "bands")
+    val agged = truth.crossJoin(broadcast(geomSpine))
+      .join(cands, Seq("bits", "bands", "vec1", "vec2"), "left")
+      .groupBy(col("bits"), col("bands"), col("cband"))
+      .agg(count(lit(1)).as("nt"),
+        coalesce(sum(col("hit")), lit(0L)).as("nf"))
+    val grid = geomSpine.crossJoin(
+      s.range(4, 11).select(col("id").as("cband")))
+    grid.join(agged, Seq("bits", "bands", "cband"), "left")
+      .select(col("bits"), col("bands"), col("cband").as("cos_band"),
+        coalesce(col("nt"), lit(0L)).as("n_truth"),
+        coalesce(col("nf"), lit(0L)).as("n_found"),
+        expr("""coalesce(nf, 0L) * 1000000L
+          div nullif(coalesce(nt, 0L), 0L)""").as("recall_micro"))
+      .orderBy(col("bits"), col("bands"), col("cos_band"))
+  }
+
   /** d27's engine: delta-vs-index embedding admission. The INDEX side
     * (vec_id % [[DeltaMod]] != 0) is the persisted corpus: its banded
     * hyperplane keys (and the geometry + integer centering stats they
@@ -2863,7 +2770,6 @@ object DedupQueries {
     * inequality, md5-parity planes), so the DuckDB twin reproduces the
     * candidate set bit-for-bit at any sf — see the d27 QueryDef. */
   def deltaAdmission(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val dims = 64
     val q = Tables.rebalance(Tables.table(s, dir, "embeddings")
         .select(col("vec_id"), Text.asDouble(col("embedding")).as("v")))
@@ -2881,51 +2787,25 @@ object DedupQueries {
       if (st.isNullAt(d + 1)) 0L else st.getLong(d + 1))
     val bits = ndBitsFor(n)
     val bands = ndBandsFor(bits)
-    // One codegen'd signature pass for BOTH sides (the production
-    // embeddingPairsLsh shape): all bands*bits sign bits as a literal
-    // plane projection — NOT a (vec, dim) melt joined to a plane
-    // frame, which materializes n*dims*bands*bits JOIN ROWS (fine for
-    // d26's 500-id audit slice, ~100x the work for a corpus-wide
-    // sign). The integer inequality dot(qvd, w)*n >= sum(w*qsum)
-    // replaces FP mean-centering: every intermediate is an integer
-    // below 2^53, so the codegen'd double dot is EXACT and the DuckDB
-    // twin reproduces each bit. Projection is cached BEFORE the
-    // explode (a Generate subtree never codegens — the lesson at
-    // embeddingPairsLsh).
-    def bandKey(b: Int): Column = (0 until bits).map { i =>
-      val p = b * bits + i
-      val plane = array((0 until dims).map(d =>
-        lit(Text.planeWeight(p, d))): _*)
-      val off = (0 until dims).map(d =>
-        if (Text.planeWeight(p, d) > 0) qsum(d) else -qsum(d)).sum
-      when(Text.dot(col("qvd"), plane).cast("long") * lit(n) >= lit(off),
-        1L << i).otherwise(0L)
-    }.reduce(_ + _)
-    val keyedAll = q
-      .withColumn("qvd", transform(col("v"), x => round(x * 1e6)))
-      .select(col("vec_id"), col("is_delta"),
-        array((0 until bands).map(b => struct(lit(b).as("band"),
-          bandKey(b).as("bk"))): _*).as("bks"))
+    // one kernel pass signs BOTH sides, cached before the explode
+    val keys = q.select(col("vec_id"), col("is_delta"),
+        graft.functions.HyperplaneBandKeys.exactKeys(col("qv"), bands,
+          bits, dims, qsum, n).as("bks"))
       .pipelineCache()
-    val keys = keyedAll
-      .select(col("vec_id"), col("is_delta"), explode(col("bks")).as("k"))
-      .select(col("vec_id"), col("is_delta"),
-        col("k.band").as("band"), col("k.bk").as("bk"))
+      .select(col("vec_id"), col("is_delta"), explode(col("bks")).as("bk"))
     // persisted-index posture: keys built once per corpus (at
     // production this is the stored banded table)
     val idxKeys = graft.core.Materialize(s, s"d27-index|$dir") {
-      keys.filter(!col("is_delta"))
-        .select(col("vec_id"), col("band"), col("bk"))
+      keys.filter(!col("is_delta")).select(col("vec_id"), col("bk"))
     }
-    val hot = idxKeys.groupBy(col("band"), col("bk"))
+    val hot = idxKeys.groupBy(col("bk"))
       .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") > NdMaxBucket)
-      .select(col("band"), col("bk"))
+      .select(col("bk"))
     val cands = keys.filter(col("is_delta"))
-      .select(col("vec_id"), col("band"), col("bk")).as("d")
-      .join(idxKeys.join(broadcast(hot), Seq("band", "bk"), "left_anti")
-        .as("i"),
-        col("d.band") === col("i.band") && col("d.bk") === col("i.bk"))
+      .select(col("vec_id"), col("bk")).as("d")
+      .join(idxKeys.join(broadcast(hot), Seq("bk"), "left_anti").as("i"),
+        col("d.bk") === col("i.bk"))
       .select(col("d.vec_id").as("vec_id"), col("i.vec_id").as("old_vec"))
       .distinct()
     val vecs = q.select(col("vec_id"), col("v"), col("nrm"))

@@ -10,9 +10,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native random-hyperplane LSH band-key builder: ALL `bands` band keys
-  * of a vector in ONE expression evaluation, replacing the composite
-  * bands × [ bits × (graft_dot(v, literal plane) ≥ offset) ] projection
-  * in the d5/d9 signature build.
+  * of a vector in ONE expression evaluation. It is the only code that
+  * turns vectors into hyperplane band keys: d5/d9 and s2/s10 call
+  * [[HyperplaneBandKeys.keys]], the integer-exact audits d25–d27 call
+  * [[HyperplaneBandKeys.exactKeys]].
   *
   * Why the composite form is the wrong shape at scale: the band geometry
   * GROWS with corpus size (ndBitsFor/ndBandsFor — 48 plane dots at
@@ -25,8 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * NearestCentroid pattern), and walks the planes in a tight primitive
   * loop.
   *
-  * FP contract (the band keys feed oracle-audited recall curves —
-  * d25/d26 — and the d5/d9 candidate sets): per plane,
+  * FP contract: per plane,
   * `acc = Σ_d v(d) · w(p,d)` in ascending d — the exact multiply-add
   * order of [[DotProduct]] over the plane literal — compared with
   * `acc >= offset(p)` where offset is the SAME driver-computed
@@ -106,7 +106,37 @@ object HyperplaneBandKeys {
     * `center` (empty = uncentered; offsets all 0 — the composite form's
     * `lit(0.0)` threshold). */
   def keys(v: Column, bands: Int, bits: Int, dims: Int,
-      center: Seq[Double] = Nil): Column = {
+      center: Seq[Double] = Nil): Column =
+    build(v, bands, bits, dims, w =>
+      // same driver-side fold the composite form used for its literal
+      // threshold: Seq#sum over ascending d
+      if (center.isEmpty) 0.0
+      else (0 until dims).map(d => center(d) * w(d)).sum)
+
+  /** Integer-exact centered band keys over a quantized vector `qv`
+    * (array<long>): bit p is set iff n·(w_p·qv) >= w_p·qsum, i.e. the
+    * sign of w_p·(qv − qsum/n) with no FP rounding anywhere, where
+    * `qsum`/`n` are the component sums and row count of the vectors
+    * the center is taken over. For an integer dot, acc >= x holds
+    * exactly when acc >= ⌈x⌉, so each plane's threshold is the
+    * driver-side `Long` ceiling ⌈(w_p·qsum) / n⌉. The kernel's double
+    * dot over integer terms is exact while every partial sum stays
+    * below 2^53 (at most 64 · 1e6 · max|v| for micro-quantized
+    * embeddings), so the keys hold bit for bit at any n. n = 0 (an
+    * empty input) has no row to key; its thresholds are 0. */
+  def exactKeys(qv: Column, bands: Int, bits: Int, dims: Int,
+      qsum: Seq[Long], n: Long): Column =
+    build(qv.cast("array<double>"), bands, bits, dims, w =>
+      if (n <= 0) 0.0
+      else {
+        val x = (0 until dims).map(d => w(d).toLong * qsum(d)).sum
+        (-Math.floorDiv(-x, n)).toDouble
+      })
+
+  /** The plane matrix plus one threshold per plane, `offset(w)` of that
+    * plane's weights `w(d)`. */
+  private def build(v: Column, bands: Int, bits: Int, dims: Int,
+      offset: (Int => Double) => Double): Column = {
     val nPlanes = bands * bits
     val planes = new Array[Double](nPlanes * dims)
     val offsets = new Array[Double](nPlanes)
@@ -117,12 +147,8 @@ object HyperplaneBandKeys {
         planes(p * dims + d) = graft.text.Text.planeWeight(p, d)
         d += 1
       }
-      // same driver-side fold the composite form used for its literal
-      // threshold: Seq#sum over ascending d
-      offsets(p) =
-        if (center.isEmpty) 0.0
-        else (0 until dims).map(d => center(d) *
-          graft.text.Text.planeWeight(p, d)).sum
+      val base = p * dims
+      offsets(p) = offset(d => planes(base + d))
       p += 1
     }
     GraftExpressionBridge.column(HyperplaneBandKeys(

@@ -44,7 +44,7 @@ final class AlignmentGraph(val ontology: Ontology) {
 
   /** G8: JSON export of the alignment graph. */
   def toJson: String = {
-    def q(s: String) = "\"" + s + "\""
+    import graft.core.Json.{str => q}
     val ns = nodes.toSeq.sorted.map(q).mkString("[", ",", "]")
     val es = edges.sortBy(e => (e.src, e.label, e.dst)).map(e =>
       s"""{"src":${q(e.src)},"dst":${q(e.dst)},"label":${q(e.label)},"weight":${e.weight}}""")

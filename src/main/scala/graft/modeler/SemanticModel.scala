@@ -50,7 +50,7 @@ final case class SemanticModel(nodes: Seq[SmNode], links: Seq[SmLink]) {
 
   /** Compact JSON serialization (G8; reference stores SSDs as JSON). */
   def toJson: String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    import graft.core.Json.{str => q}
     val ns = nodes.map {
       case ClassNode(id, l) => s"""{"id":$id,"type":"class","label":${q(l)}}"""
       case ColumnNode(id, l) => s"""{"id":$id,"type":"column","label":${q(l)}}"""
@@ -64,37 +64,18 @@ final case class SemanticModel(nodes: Seq[SmNode], links: Seq[SmLink]) {
 
 object SemanticModel {
 
-  /** Parse the toJson format back (minimal hand-rolled JSON reader for
-    * exactly the shape toJson emits). */
+  /** Parse the toJson format back (Jackson, which ships with Spark). */
   def fromJson(json: String): SemanticModel = {
-    def objs(arr: String): Seq[String] = {
-      val out = collection.mutable.Buffer[String]()
-      var depth = 0; var start = -1
-      arr.zipWithIndex.foreach { case (c, i) =>
-        if (c == '{') { if (depth == 0) start = i; depth += 1 }
-        else if (c == '}') { depth -= 1; if (depth == 0) out += arr.substring(start, i + 1) }
-      }
-      out.toSeq
+    import scala.jdk.CollectionConverters._
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    def objs(k: String) = root.get(k).elements.asScala.toSeq
+    val nodes = objs("nodes").map { o =>
+      val (id, label) = (o.get("id").asInt, o.get("label").asText)
+      if (o.get("type").asText == "class") ClassNode(id, label)
+      else ColumnNode(id, label)
     }
-    def field(o: String, k: String): String = {
-      val m = ("\"" + k + "\":(\"(?:[^\"\\\\]|\\\\.)*\"|[^,}]+)").r
-        .findFirstMatchIn(o).get.group(1)
-      if (m.startsWith("\""))
-        m.substring(1, m.length - 1).replace("\\\"", "\"").replace("\\\\", "\\")
-      else m
-    }
-    val nodesArr = json.substring(json.indexOf("\"nodes\":") + 8,
-      json.indexOf(",\"links\""))
-    val linksArr = json.substring(json.indexOf("\"links\":") + 8)
-    val nodes = objs(nodesArr).map { o =>
-      val id = field(o, "id").toInt
-      if (field(o, "type") == "class") ClassNode(id, field(o, "label"))
-      else ColumnNode(id, field(o, "label"))
-    }
-    val links = objs(linksArr).map { o =>
-      SmLink(field(o, "src").toInt, field(o, "dst").toInt,
-        field(o, "label"), field(o, "weight").toDouble)
-    }
+    val links = objs("links").map(o => SmLink(o.get("src").asInt,
+      o.get("dst").asInt, o.get("label").asText, o.get("weight").asDouble))
     SemanticModel(nodes, links)
   }
 

@@ -40,6 +40,10 @@ object SimilarityQueries {
   val PqK = 16
   val PqIters = 2
 
+  /** PQ's key column for [[assignToCentroids]] and the Lloyd loop: one
+    * codebook per subspace. */
+  private val PqKeys = Seq("sub")
+
   /** 16 deterministic pseudo-random +/-1 hyperplanes over 64 dims. */
   val Planes = 16
   val Dims = 64
@@ -52,8 +56,48 @@ object SimilarityQueries {
       .select(col("vec_id"), col("label"), Text.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Text.norm(col("v")))
 
-  /** LSH signature column: sign bits of v . plane_p packed into an int. */
+  /** s15's LSH signature column: sign bits of v . plane_p packed into a
+    * long. s15's multiprobe flips bits inside a band, which the
+    * `"band:key"` strings of [[graft.functions.HyperplaneBandKeys]] do
+    * not expose. */
   private def sigCol(v: Column): Column = Text.hyperplaneSig(v, Planes, Dims)
+
+  /** s2/s10's LSH candidate set, exactly scored: (query_id, vec_id,
+    * cos) for every corpus vector sharing one of 4 hyperplane band keys
+    * (4 bits each, uncentered) with one of the NumQueries query
+    * vectors. SLIM band index: the candidate dedup runs on 16-byte id
+    * pairs, the persist holds ids instead of 64-double arrays, and the
+    * vectors join back only for the rerank — no exchange ever carries
+    * an embedding (the old wide form measured 47.3 s vs s15's 5.8 s on
+    * the 150-query sf10 chain). The eager checkpoint of the bounded
+    * id-pair frame lets the band index unpersist before returning. */
+  private def lshScored(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame = {
+    val bandSlim = corpus(s, dir)
+      .select(col("vec_id"),
+        graft.functions.HyperplaneBandKeys.keys(col("v"), 4, 4, Dims)
+          .as("bks"))
+      .select(col("vec_id"), explode(col("bks")).as("bk"))
+      .persist()
+    val candIds = bandSlim.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("query_id"), col("bk"))
+      .join(bandSlim, Seq("bk"))
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), col("vec_id"))
+      .dropDuplicates("query_id", "vec_id")
+      .localCheckpoint(true)
+    bandSlim.unpersist()
+    val eSlim = corpus(s, dir).select(col("vec_id"), col("v"), col("nrm"))
+    val qv = broadcast(eSlim.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"),
+        col("nrm").as("qnrm")))
+    candIds
+      .join(qv, Seq("query_id"))
+      .join(eSlim, Seq("vec_id"))
+      .withColumn("cos", round(Text.dot(col("qv"), col("v")) /
+        (col("qnrm") * col("nrm")), 6))
+      .select(col("query_id"), col("vec_id"), col("cos"))
+  }
 
   /** DuckDB CTE chain `e / sig / banded` reproducing the hyperplane
     * LSH index arithmetic (planeWeight's md5("p:d") first-byte parity
@@ -124,43 +168,9 @@ object SimilarityQueries {
     // ---- s2: random-hyperplane LSH candidate generation + exact rerank
     "s2_ann_lsh" -> QueryDef(
       (s, dir) => {
-        // SLIM band index (the s10 shape, backported after the 150-query
-        // sf10 chain measured the old form at 47.3 s vs s15's 5.8 s
-        // doing 5x the probing): the candidate dedup runs on 16-byte id
-        // pairs, the persist holds ids instead of 64-double arrays, and
-        // the vectors join back only for the exact rerank — no exchange
-        // ever carries an embedding. 4 bands of 4 signature bits;
-        // candidates share any band value. Result identical: same
-        // candidate set, same rounded cosines, same rank order.
-        val bandSlim = corpus(s, dir).withColumn("sig", sigCol(col("v")))
-          .select(col("vec_id"),
-            explode(array((0 until 4).map(b =>
-              concat_ws(":", lit(b),
-                expr(s"shiftright(sig, ${4 * b}) & 15"))): _*)).as("bk"))
-          .persist()
-        // eager checkpoint of the bounded id-pair frame lets bandSlim
-        // unpersist HERE instead of leaking a cached RDD (s10's
-        // lifecycle; every consumer below reads the checkpointed pairs)
-        val candIds = bandSlim.filter(col("vec_id") < NumQueries)
-          .select(col("vec_id").as("query_id"), col("bk"))
-          .join(bandSlim, Seq("bk"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .select(col("query_id"), col("vec_id"))
-          .dropDuplicates("query_id", "vec_id")
-          .localCheckpoint(true)
-        bandSlim.unpersist()
-        val eSlim = corpus(s, dir).select(col("vec_id"), col("v"), col("nrm"))
-        val qv = broadcast(eSlim.filter(col("vec_id") < NumQueries)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"),
-            col("nrm").as("qnrm")))
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("cos").desc, col("vec_id"))
-        candIds
-          .join(qv, Seq("query_id"))
-          .join(eSlim, Seq("vec_id"))
-          .withColumn("cos", round(Text.dot(col("qv"), col("v")) /
-            (col("qnrm") * col("nrm")), 6))
-          .select(col("query_id"), col("vec_id"), col("cos"))
+        lshScored(s, dir)
           .withColumn("rank", row_number().over(w).cast("long"))
           .filter(col("rank") <= TopK)
           .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -360,7 +370,7 @@ object SimilarityQueries {
       (s, dir) => {
         val m = pqMelt(s, dir)
         val cents = pqCodebooks(s, dir)
-        val codes = assignToSubCentroids(m, cents)
+        val codes = assignToCentroids(m, cents, PqKeys)
           .select(col("vec_id"), col("sub"), col("k"))
         // per-query ADC table: dist from each query subvector to each
         // sub-centroid — NumQueries*M*K rows, broadcast
@@ -412,7 +422,7 @@ object SimilarityQueries {
         // PQ codes + per-query ADC table (shared codebooks)
         val pm = pqMelt(s, dir)
         val pqc = pqCodebooks(s, dir)
-        val codes = assignToSubCentroids(pm, pqc)
+        val codes = assignToCentroids(pm, pqc, PqKeys)
           .select(col("vec_id"), col("sub"), col("k").as("code"))
         val qd = pm.filter(col("vec_id") < NumQueries)
           .join(broadcast(pqc), Seq("sub", "d"))
@@ -640,41 +650,7 @@ object SimilarityQueries {
   private def s10Range(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import s.implicits._
-    // SLIM band index: (vec_id, bk) only. s2 dedups candidates with
-    // the vector arrays already projected onto the rows — fine at
-    // top-k result sizes, but at range-search candidate volumes the
-    // distinct shuffles ~1 KB per candidate (the measured sf100
-    // term). Here the distinct runs on 16-byte id pairs, the persist
-    // holds ids instead of 64-double arrays, and the vectors join
-    // back AFTER — no exchange ever carries an embedding.
-    val bandSlim = corpus(s, dir).withColumn("sig", sigCol(col("v")))
-      .select(col("vec_id"),
-        explode(array((0 until 4).map(b =>
-          concat_ws(":", lit(b),
-            expr(s"shiftright(sig, ${4 * b}) & 15"))): _*)).as("bk"))
-      .persist()
-    // eager checkpoint of the bounded id-pair frame lets bandSlim
-    // unpersist HERE instead of leaking a cached RDD per invocation
-    // (the pqMelt/kmeansMelt lifecycle): every consumer below reads
-    // the checkpointed pairs, never the band index
-    val candIds = bandSlim.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("bk"))
-      .join(bandSlim, Seq("bk"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"))
-      .dropDuplicates("query_id", "vec_id")
-      .localCheckpoint(true)
-    bandSlim.unpersist()
-    val eSlim = corpus(s, dir).select(col("vec_id"), col("v"), col("nrm"))
-    val qv = broadcast(eSlim.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnrm")))
-    val scored = candIds
-      .join(qv, Seq("query_id"))
-      .join(eSlim, Seq("vec_id"))
-      .withColumn("cos", round(Text.dot(col("qv"), col("v")) /
-        (col("qnrm") * col("nrm")), 6))
-      .select(col("query_id"), col("vec_id"), col("cos"))
+    val scored = lshScored(s, dir)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     val best = scored.withColumn("rn", row_number().over(w))
@@ -1040,43 +1016,6 @@ object SimilarityQueries {
     kmeansMelt(s, dir)
       .withColumn("sub", (col("d") / lit(Dims / PqM)).cast("long"))
 
-  /** Per-(vector, subspace) nearest code: (vec_id, sub, k, dist); ties
-    * to the lower code id via the struct min, like [[assignToCentroids]]. */
-  private def assignToSubCentroids(m: DataFrame, c: DataFrame): DataFrame =
-    m.join(broadcast(c), Seq("sub", "d"))
-      .groupBy(col("vec_id"), col("sub"), col("k"))
-      .agg(sum((col("x6") - col("c6")) * (col("x6") - col("c6"))).as("dist"))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("dist"), col("k"))).as("a"))
-      .select(col("vec_id"), col("sub"),
-        col("a.k").as("k"), col("a.dist").as("dist"))
-
-  /** PQ codebooks (sub, k, d, c6), materialized once per dir. Seeds:
-    * the PqK lowest vec_ids provide the initial sub-centroids in every
-    * subspace (deterministic, mirrors the s4 init). */
-  def pqCodebooks(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    graft.core.Materialize(s, s"pq-cents|$dir") {
-      val m = pqMelt(s, dir).persist()
-      val init = m.select(col("vec_id")).distinct()
-        .orderBy(col("vec_id")).limit(PqK)
-        .withColumn("k", (row_number().over(
-          Window.orderBy(col("vec_id"))) - 1).cast("long"))
-      var cents = m.join(broadcast(init), "vec_id")
-        .select(col("sub"), col("k"), col("d"), col("x6").as("c6"))
-        .localCheckpoint(true)
-      for (_ <- 1 to PqIters) {
-        val a = assignToSubCentroids(m, cents)
-        cents = a.join(m, Seq("vec_id", "sub"))
-          .groupBy(col("sub"), col("k"), col("d"))
-          .agg(floor(sum(col("x6")).cast("double") / count(lit(1)) + 0.5)
-            .cast("long").as("c6"))
-          .localCheckpoint(true)
-      }
-      m.unpersist()
-      cents
-    }
-
   /** DuckDB twin of the PQ chain: subspaced Lloyd loop (pd/pa/pc),
     * final code assignment, and the ADC join — `qd` falls out of the
     * same `pfin` distance table the codes come from. */
@@ -1152,45 +1091,64 @@ object SimilarityQueries {
       .select(col("vec_id"), col("d"),
         floor(col("x").cast("double") * 1e6 + 0.5).cast("long").as("x6"))
 
-  /** Nearest-centroid assignment (vec_id, k, dist): one broadcast join
-    * of the corpus melt against the K*Dims centroid frame + two
-    * map-side-combined aggregations. Ties break to the lower cell id
-    * via the lexicographic struct min. */
-  def assignToCentroids(m: DataFrame, c: DataFrame): DataFrame =
-    m.join(broadcast(c), "d")
-      .groupBy(col("vec_id"), col("k"))
+  /** Nearest-centroid assignment (vec_id, keys..., k, dist): one
+    * broadcast join of the corpus melt against the centroid frame + two
+    * map-side-combined aggregations, per `keys` group (Nil for s4's
+    * whole-vector cells, [[PqKeys]] for PQ's per-subspace codes). Ties
+    * break to the lower cell id via the lexicographic struct min. */
+  def assignToCentroids(m: DataFrame, c: DataFrame,
+      keys: Seq[String] = Nil): DataFrame = {
+    val by = col("vec_id") +: keys.map(col)
+    m.join(broadcast(c), keys :+ "d")
+      .groupBy(by :+ col("k"): _*)
       .agg(sum((col("x6") - col("c6")) * (col("x6") - col("c6"))).as("dist"))
-      .groupBy(col("vec_id"))
+      .groupBy(by: _*)
       .agg(min(struct(col("dist"), col("k"))).as("a"))
-      .select(col("vec_id"), col("a.k").as("k"), col("a.dist").as("dist"))
+      .select(by ++ Seq(col("a.k").as("k"), col("a.dist").as("dist")): _*)
+  }
 
   /** Lloyd-trained centroids (k, d, c6), materialized once per dir —
     * s4 (assignments) and s5 (IVF probe + cells) share one training
-    * run, as a production pipeline shares one index build. Initial
-    * centroids are the K lowest vec_ids (deterministic seed); the init
-    * window sorts a K-row frame, not the corpus. */
+    * run, as a production pipeline shares one index build. */
   def kmeansCentroids(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
     graft.core.Materialize(s, s"kmeans-cents|$dir") {
-      val m = kmeansMelt(s, dir).persist()
-      val init = m.select(col("vec_id")).distinct()
-        .orderBy(col("vec_id")).limit(KmeansK)
-        .withColumn("k", (row_number().over(
-          Window.orderBy(col("vec_id"))) - 1).cast("long"))
-      var cents = m.join(broadcast(init), "vec_id")
-        .select(col("k"), col("d"), col("x6").as("c6"))
-        .localCheckpoint(true)
-      for (_ <- 1 to KmeansIters) {
-        val a = assignToCentroids(m, cents)
-        cents = a.join(m, "vec_id")
-          .groupBy(col("k"), col("d"))
-          .agg(floor(sum(col("x6")).cast("double") / count(lit(1)) + 0.5)
-            .cast("long").as("c6"))
-          .localCheckpoint(true)
-      }
-      m.unpersist()
-      cents
+      lloyd(kmeansMelt(s, dir), Nil, KmeansK, KmeansIters)
     }
+
+  /** PQ codebooks (sub, k, d, c6), materialized once per dir. */
+  private def pqCodebooks(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    graft.core.Materialize(s, s"pq-cents|$dir") {
+      lloyd(pqMelt(s, dir), PqKeys, PqK, PqIters)
+    }
+
+  /** The integer-exact Lloyd loop over a melt, run per `keys` group:
+    * `k` centroids (keys..., k, d, c6) after `iters` rounds. Initial
+    * centroids are the `k` lowest vec_ids (deterministic seed, in every
+    * group); the init window sorts a k-row frame, not the corpus. */
+  private def lloyd(melt: DataFrame, keys: Seq[String], k: Int,
+      iters: Int): DataFrame = {
+    val m = melt.persist()
+    val init = m.select(col("vec_id")).distinct()
+      .orderBy(col("vec_id")).limit(k)
+      .withColumn("k", (row_number().over(
+        Window.orderBy(col("vec_id"))) - 1).cast("long"))
+    var cents = m.join(broadcast(init), "vec_id")
+      .select(keys.map(col) ++ Seq(col("k"), col("d"),
+        col("x6").as("c6")): _*)
+      .localCheckpoint(true)
+    for (_ <- 1 to iters) {
+      val a = assignToCentroids(m, cents, keys)
+      cents = a.join(m, "vec_id" +: keys)
+        .groupBy(keys.map(col) ++ Seq(col("k"), col("d")): _*)
+        .agg(floor(sum(col("x6")).cast("double") / count(lit(1)) + 0.5)
+          .cast("long").as("c6"))
+        .localCheckpoint(true)
+    }
+    m.unpersist()
+    cents
+  }
 
   /** Shared DuckDB CTE chain reproducing the integer-exact Lloyd loop
     * (d_i = distances, a_i = argmin assignment, c_i = rounded centroid

@@ -192,9 +192,9 @@ object Text {
     * bits are unbiased and independent across (p, d), so the banding
     * math the operators document actually holds. */
   // driver-side memo: plan construction touches each (p, d) several
-  // times (threshold fold + literal plane arrays), and the d26
-  // geometry sweep walks ~180k distinct (p, d) cells — one MD5 each is
-  // ~1s of pure driver hashing without the cache, none with it
+  // times (plane matrix + threshold fold), and the d26 geometry sweep
+  // walks ~180k distinct (p, d) cells — one MD5 each is ~1s of pure
+  // driver hashing without the cache, none with it
   private val planeMemo =
     new java.util.concurrent.ConcurrentHashMap[Long, java.lang.Double]()
   def planeWeight(p: Int, d: Int): Double =
@@ -205,7 +205,9 @@ object Text {
     })
 
   /** Random-hyperplane LSH signature: sign bits of v . plane_p packed
-    * into a long (lowest bit = plane 0). `planes` must be <= 62.
+    * into a long (lowest bit = plane 0). `planes` must be <= 62. s15
+    * runs it (its multiprobe flips bits inside a band); DedupSpec pins
+    * it against [[hyperplaneBandKey]].
     * Plane dots go through the codegen'd [[dot]] (bit-identical to the
     * HOF fold it replaced — same multiply-add order — but stays inside
     * whole-stage codegen; the interpreted fold was the measured
@@ -216,7 +218,9 @@ object Text {
       when(dot(v, plane) >= 0, 1L << p).otherwise(0L)
     }.reduce(_ + _)
 
-  /** One band's random-hyperplane key: the `bits` sign bits of band
+  /** One band's random-hyperplane key, the composite reference that
+    * BandKeysParitySpec pins [[graft.functions.HyperplaneBandKeys]]
+    * against: the `bits` sign bits of band
     * `band`'s plane set (global plane index band*bits+i at local bit
     * i — bit-identical to extracting band `band` from a packed
     * [[hyperplaneSig]] of bands*bits planes when `center` is empty).

@@ -261,26 +261,23 @@ class GlobalPlanSpec extends SparkSpec {
     "s10_range_search" -> 6,
     "d21_lsh_recall" -> 1,
     "d22_containment_recall" -> 4,
-    // d25: slice-bounded audit — hot-bucket groupBy, band self-join
-    // (both sides of the exploded key frame), candidate distinct,
-    // truth-vs-found band groupBy + the 7-row grid join; every
-    // shuffled frame is slice-bounded (NdEvalMaxIds)
+    // d25/d26: one audit pipeline (d25 is d26's (8, 12) geometry):
+    // hot-bucket groupBy, band self-join (both sides of the exploded
+    // key frame), candidate distinct, truth-vs-found groupBy + the
+    // grid join and sort. Keys come from one native kernel call per
+    // geometry with (bits, bands) riding the keys, so 7 geometries
+    // plan the same 7 shuffles as one; the sign-bit melt join it
+    // replaced planned 17. Every shuffled frame is slice-bounded
+    // (NdEvalMaxIds)
     "d25_embedding_lsh_recall" -> 7,
-    // d26: ONE geometry-keyed audit pipeline (plane family as a
-    // broadcast data frame into the sign-bit melt, then a single
-    // key/hot/anti/self-join chain with (bits, bands) riding the
-    // keys) + the truth-vs-found groupBy and 49-row grid join; every
-    // shuffled frame is slice-bounded. The per-geometry loop form
-    // cost 26 shuffles and 7.1 s of per-job overhead; this is 17 and
-    // 1.9 s at sf0.1 (constant at any corpus size)
-    "d26_lsh_geometry_sweep" -> 17,
-    // d27: one cached signature projection for both sides (stats agg +
+    "d26_lsh_geometry_sweep" -> 7,
+    // d27: one cached band-key kernel pass for both sides (stats agg +
     // cache fill), persisted-index Materialize boundary, hot-cap
     // groupBy + anti, the delta-vs-index key-equality probe join +
     // distinct, two id-joins for verify, the per-delta agg and the
     // delta-spine left join + presentation sort. Every join is
-    // key-equality; the only corpus-wide shuffles carry (vec_id,
-    // band, bk) keys
+    // key-equality; the only corpus-wide shuffles carry (vec_id, bk)
+    // keys
     "d27_delta_admission" -> 15,
     "e9_curriculum_buckets" -> 3,
     "s11_cluster_report" -> 6,

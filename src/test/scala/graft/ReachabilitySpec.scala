@@ -51,6 +51,18 @@ class ReachabilitySpec extends AnyFunSuite {
       s"named nowhere in src/main but their own declarations: $unnamed")
   }
 
+  test("only Text and HyperplaneBandKeys compute hyperplane weights") {
+    // a query that calls planeWeight( composes its own band keys; they
+    // belong to graft.functions.HyperplaneBandKeys (the DuckDB twins'
+    // SQL names planeWeight without a call, so it does not count)
+    val owners = Seq("text/Text.scala", "functions/HyperplaneBandKeys.scala")
+    val callers = sourceFiles("src/main").collect {
+      case (path, text) if text.contains("planeWeight(") &&
+        !owners.exists(path.endsWith) => path
+    }
+    assert(callers.isEmpty, s"planeWeight( called outside $owners: $callers")
+  }
+
   test("every member def/val/var in src/main is named outside its declaration") {
     val main = sources("src/main")
     val all = main ++ sources("src/test") ++ sources("perfbench/harness/src")
@@ -84,12 +96,15 @@ object ReachabilitySpec {
       "(?:\\[\\w+\\])?\\s+|@\\w+\\s+)*)(?:def|val|var)\\s+([A-Za-z_]\\w*)").r
 
   /** The comment-stripped text of every .scala file under `dir`. */
-  private def sources(dir: String): Seq[String] = {
+  private def sources(dir: String): Seq[String] = sourceFiles(dir).map(_._2)
+
+  /** (path, comment-stripped text) of every .scala file under `dir`. */
+  private def sourceFiles(dir: String): Seq[(String, String)] = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val s = Files.walk(Paths.get(dir))
     try s.iterator().asScala.map(_.toString).filter(_.endsWith(".scala"))
-      .map(f => stripComments(Files.readString(Paths.get(f)))).toSeq
+      .map(f => f -> stripComments(Files.readString(Paths.get(f)))).toSeq
     finally s.close()
   }
 

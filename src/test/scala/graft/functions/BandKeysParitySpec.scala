@@ -13,7 +13,9 @@ import graft.text.Text
   * driver-computed center offsets, same rendering. Covered geometries:
   * the sf0.1 production point (bits 4 × 12 bands), the sf10 point the
   * scaling law produces (bits 11 × 15 bands), centered and uncentered,
-  * plus ragged/edge vectors. */
+  * plus ragged/edge vectors. [[HyperplaneBandKeys.exactKeys]] is pinned
+  * to the cleared integer inequality n·(w·qv) >= w·qsum evaluated in
+  * `Long`. */
 class BandKeysParitySpec extends SparkSpec {
 
   private val dims = 64
@@ -86,5 +88,91 @@ class BandKeysParitySpec extends SparkSpec {
         assert(key >= 0L && key < (1L << bits))
       }
     }
+  }
+
+  /** The cleared centering inequality in `Long`: bit i of band b is set
+    * iff n·(w_p·qv) >= w_p·qsum, p = b·bits + i. */
+  private def exactReference(qv: Seq[Long], bands: Int, bits: Int,
+      qsum: Seq[Long], n: Long): Seq[String] =
+    (0 until bands).map { b =>
+      val key = (0 until bits).map { i =>
+        val w = (0 until dims).map(d => Text.planeWeight(b * bits + i, d).toLong)
+        val dot = (0 until dims).map(d => w(d) * qv(d)).sum
+        val off = (0 until dims).map(d => w(d) * qsum(d)).sum
+        if (n * dot >= off) 1L << i else 0L
+      }.sum
+      s"$b:$key"
+    }
+
+  private def compareExact(vecs: Seq[Seq[Long]], qsum: Seq[Long], n: Long,
+      bands: Int = 12, bits: Int = 8): Unit = {
+    import spark.implicits._
+    val got = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "qv")
+      .select(col("vec_id"), HyperplaneBandKeys.exactKeys(col("qv"), bands,
+        bits, dims, qsum, n).as("bks"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    assert(got.size === vecs.size)
+    vecs.zipWithIndex.foreach { case (v, i) =>
+      assert(got(i.toLong) === exactReference(v, bands, bits, qsum, n),
+        s"vec $i, n=$n, bands=$bands bits=$bits")
+    }
+  }
+
+  /** Seeded micro-quantized vectors: components in [lo, lo + span). */
+  private def intVectors(count: Int, lo: Long, span: Long,
+      seed: Long): Seq[Seq[Long]] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(count)(Seq.fill(dims)(lo + (rnd.nextDouble() * span).toLong))
+  }
+
+  private def sums(vecs: Seq[Seq[Long]]): Seq[Long] =
+    (0 until dims).map(d => vecs.map(_(d)).sum)
+
+  test("exactKeys == the Long centering inequality, random integer vectors") {
+    val vecs = intVectors(40, -3000000L, 6000000L, 7L)
+    compareExact(vecs, sums(vecs), vecs.size.toLong)
+    compareExact(vecs, sums(vecs), vecs.size.toLong, bands = 12, bits = 4)
+    // the sweep's widest geometry, centered on a corpus the frame is not
+    compareExact(vecs, sums(intVectors(13, -5000000L, 9000000L, 8L)), 13L,
+      bands = 22, bits = 24)
+  }
+
+  test("exactKeys with negative offset sums") {
+    // a corpus far below zero: every w·qsum is large and of either sign,
+    // and the ceiling runs over negative quotients
+    val vecs = intVectors(30, -4000000L, 1000000L, 9L)
+    val qsum = sums(vecs)
+    assert((0 until 96).exists(p => (0 until dims).map(d =>
+      Text.planeWeight(p, d).toLong * qsum(d)).sum < 0))
+    compareExact(vecs, qsum, vecs.size.toLong)
+  }
+
+  test("exactKeys at the boundary n·(w·qv) == w·qsum") {
+    val vecs = intVectors(20, -1000000L, 2000000L, 11L)
+    val n = 7L
+    // qsum = n·qv0: every plane of vector 0 sits exactly on its
+    // threshold (all bits set, `>=`); the others land on either side
+    compareExact(vecs, vecs.head.map(_ * n), n)
+    // one unit off the boundary in one dimension: the ceiling decides
+    compareExact(vecs, vecs.head.zipWithIndex.map { case (x, d) =>
+      x * n + (if (d == 3) 1L else 0L) }, n)
+    compareExact(vecs, vecs.head.zipWithIndex.map { case (x, d) =>
+      x * n - (if (d == 5) 1L else 0L) }, n)
+  }
+
+  test("exactKeys with n = 1") {
+    val vecs = intVectors(10, -2000000L, 4000000L, 13L)
+    compareExact(vecs.take(1), vecs.head, 1L)
+    compareExact(vecs, vecs(4), 1L)
+  }
+
+  test("exactKeys over an empty frame with n = 0 plans and returns no row") {
+    import spark.implicits._
+    val rows = Seq.empty[(Long, Seq[Long])].toDF("vec_id", "qv")
+      .select(col("vec_id"), HyperplaneBandKeys.exactKeys(col("qv"), 12, 8,
+        dims, Seq.fill(dims)(0L), 0L).as("bks"))
+      .collect()
+    assert(rows.isEmpty)
   }
 }

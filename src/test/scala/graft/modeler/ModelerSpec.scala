@@ -75,6 +75,30 @@ class ModelerSpec extends AnyFunSuite {
     assert(back.nodes === m.nodes)
   }
 
+  test("semantic model JSON round-trips labels with braces, quotes, " +
+      "backslashes and newlines") {
+    val labels = Seq("a}b", "{c", "q\"uote", "back\\slash", "new\nline",
+      "tab\tand a literal \\n")
+    val m = SemanticModel(
+      labels.zipWithIndex.map { case (l, i) =>
+        if (i % 2 == 0) ClassNode(i, l) else ColumnNode(i, l)
+      } :+ ClassNode(99, "after"),
+      Seq(SmLink(0, 1, "p}{\"\\\n", 0.5), SmLink(0, 99, "last")))
+    val json = m.toJson
+    // one line per model in Octopus's known_models.jsonl
+    assert(!json.contains("\n"))
+    assert(SemanticModel.fromJson(json) === m)
+  }
+
+  test("alignment graph JSON escapes its labels") {
+    val ont = Ontology(Set("A\"x", "B\\y"), Nil,
+      Seq(ObjectProp("p\nq", "A\"x", "B\\y")), Map.empty)
+    val json = new AlignmentGraph(ont).toJson
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(tree.get("nodes").get(0).asText === "A\"x")
+    assert(tree.get("edges").get(0).get("label").asText === "p\nq")
+  }
+
   test("triple evaluation computes precision/recall/jaccard") {
     val a = SemanticModel(
       Seq(ClassNode(0, "A"), ClassNode(1, "B"), ColumnNode(2, "c")),
